@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 object Bench {
@@ -48,11 +50,12 @@ object Bench {
       // warmup must never kill the sweep: a dataset dir missing one
       // of these tables (or a SPARK_GRAFT_ONLY selection that never
       // touches them) previously crashed at warmup — each shape now
-      // logs and continues on failure (r16, ADVICE item)
+      // logs and continues on a non-fatal failure; fatal errors
+      // (VirtualMachineError, InterruptedException, ...) still end the run
       def noop(df: => org.apache.spark.sql.DataFrame): Unit =
         try df.write.format("noop").mode("overwrite").save()
         catch {
-          case e: Throwable =>
+          case NonFatal(e) =>
             System.err.println(s"[bench] warmup shape skipped: ${e.getMessage}")
         }
       lazy val wLi = spark.read.parquet(s"$sfDir/lineitem.parquet")
@@ -105,7 +108,7 @@ object Bench {
           spark.sparkContext.cancelJobGroup(group)
           System.err.println(s"[bench] $name timed out after ${timeoutS}s")
           -1.0
-        case e: Throwable =>
+        case NonFatal(e) =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           -1.0
       }

@@ -1,9 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 
-import graft.model.CandleTimeFrame
+import graft.model.Candle
 
 /** Persistent candle store — the Spark-native replacement for the
   * reference's Redis store (reference:
@@ -19,6 +21,16 @@ import graft.model.CandleTimeFrame
   * manageable (4 TFs × |symbols|). For ultra-high symbol cardinality,
   * swap `symbol` for `pmod(xxhash64(symbol), nBuckets)` — the read
   * path below would then prune on the bucket column.
+  *
+  * [[range]], [[point]], [[recent]] and [[candleKeys]] never resolve
+  * the whole store: they read only the directories their timeframe
+  * and/or symbol name, with the schema of [[graft.model.Candle]]
+  * instead of one inferred from parquet footers. That skips both the
+  * full-store listing and the footer-inference job, and keeps a
+  * numeric-looking symbol such as `0700` a string. A named directory
+  * that does not exist reads as an empty frame. Both layouts resolve
+  * this way: `(timeframe, symbol)` from [[write]] and `(timeframe,
+  * symbol, window_date)` from `CandleStream.cascadeMerge`.
   */
 object CandleStore {
 
@@ -42,54 +54,74 @@ object CandleStore {
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 
-  /** Range query against the store: timeframe+symbol hit partition
-    * pruning, the window_start range hits row-group pruning.
+  private val candleSchema = Encoders.product[Candle].schema
+
+  /** The store restricted to the `timeframe=…/symbol=…` directories
+    * that `tf` and `symbol` name (an absent filter spans every stored
+    * value), read with the model schema. Directory names are escaped
+    * exactly as Spark's partitioned writer escapes them; directories
+    * that do not exist are skipped, and when none exists the result
+    * is an empty frame rather than a PATH_NOT_FOUND error.
+    */
+  private def readScoped(spark: SparkSession, path: String,
+                         tf: Option[String], symbol: Option[String]): DataFrame = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def dir(parent: Path, column: String, value: String) =
+      new Path(parent, ExternalCatalogUtils.getPartitionPathString(column, value))
+    val tfDirs = tf match {
+      case Some(t) => Seq(dir(root, "timeframe", t))
+      case None => fs.listStatus(root).toSeq.map(_.getPath)
+        .filter(_.getName.startsWith("timeframe="))
+    }
+    val dirs = symbol.fold(tfDirs)(s => tfDirs.map(dir(_, "symbol", s)))
+      .filter(fs.exists)
+    if (dirs.isEmpty)
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), candleSchema)
+    else spark.read.schema(candleSchema).option("basePath", path)
+      .parquet(dirs.map(_.toString): _*)
+  }
+
+  /** Range query against the store: reads the one (timeframe, symbol)
+    * directory; the window_start range hits row-group pruning.
     */
   def range(spark: SparkSession, path: String, symbol: String, tf: String,
             from: String, to: String): DataFrame =
-    CandleQueries.range(read(spark, path), symbol, tf, from, to)
+    CandleQueries.range(readScoped(spark, path, Some(tf), Some(symbol)),
+      symbol, tf, from, to)
 
-  /** Point lookup by the reference's date-key format. */
+  /** Point lookup by the reference's date-key format, over the one
+    * (timeframe, symbol) directory.
+    */
   def point(spark: SparkSession, path: String, symbol: String, tf: String,
             dateKey: String): DataFrame =
-    CandleQueries.pointLookup(read(spark, path), symbol, tf, dateKey)
+    CandleQueries.pointLookup(readScoped(spark, path, Some(tf), Some(symbol)),
+      symbol, tf, dateKey)
 
-  /** Latest n candles per symbol from the store (timeframe partition
-    * pruned; per-symbol top-k via WindowGroupLimit, no global sort).
+  /** Latest n candles per symbol from the store (reads the timeframe's
+    * directory only; per-symbol top-k via WindowGroupLimit, no global
+    * sort).
     */
   def recent(spark: SparkSession, path: String, tf: String, n: Int): DataFrame =
-    CandleQueries.recent(read(spark, path), tf, n)
+    CandleQueries.recent(readScoped(spark, path, Some(tf), None), tf, n)
 
   /** Enumerate stored candle keys in the reference's
     * `candle:{symbol}:{TF}:{dateKey}` format (reference:
     * service/CandleStickService.kt:176-196 getAllCandleKeys /
     * getSymbolCandleKeys / getSymbolTimeFrameCandleKeys — Redis
-    * `KEYS candle:…*` scans). Optional symbol/timeframe filters land
-    * on the partition columns, so a filtered enumeration prunes to
-    * the matching directories instead of scanning the store — the
-    * Spark analogue of Redis's prefix scan.
+    * `KEYS candle:…*` scans). Optional symbol/timeframe filters pick
+    * the directories read, so a filtered enumeration resolves only the
+    * matching directories instead of the whole store — the Spark
+    * analogue of Redis's prefix scan. The same filters also stay on the
+    * partition columns, so the plan shows them as PartitionFilters.
     */
   def candleKeys(spark: SparkSession, path: String,
                  symbol: Option[String] = None,
-                 tf: Option[String] = None): DataFrame = {
-    val base = read(spark, path)
-    val pruned = Seq(
-      symbol.map(col("symbol") === _),
-      tf.map(col("timeframe") === _)
-    ).flatten.foldLeft(base)(_.filter(_))
-    pruned.select(concat(
-      lit("candle:"), col("symbol"), lit(":"), col("timeframe"), lit(":"),
-      // per-timeframe date format, resolved per row from the
-      // timeframe partition value (one when-chain, codegen'd)
-      CandleTimeFrame.all.tail.foldLeft(
-        when(col("timeframe") === CandleTimeFrame.all.head,
-          date_format(col("window_start"),
-            CandleTimeFrame.keyFormat(CandleTimeFrame.all.head)))) {
-        (acc, t) => acc.when(col("timeframe") === t,
-          date_format(col("window_start"), CandleTimeFrame.keyFormat(t)))
-      }).as("key"))
+                 tf: Option[String] = None): DataFrame =
+    Seq(symbol.map(col("symbol") === _), tf.map(col("timeframe") === _)).flatten
+      .foldLeft(readScoped(spark, path, tf, symbol))(_.filter(_))
+      .select(Candles.candleKeyDynamic.as("key"))
       .orderBy("key")
-  }
 
   /** Compact a store in place: streaming/incremental appends leave
     * many small files per partition; rewrite each (timeframe, symbol)
@@ -151,8 +183,9 @@ object CandleStore {
 
   /** All stored (timeframe, symbol) combos — the analog of the
     * reference's Redis `keys candle:*` scans
-    * (CandleStickService.kt:181-196), answered from partition
-    * directories without touching data files.
+    * (CandleStickService.kt:181-196). The values come from partition
+    * directory names, but resolving the whole store and the distinct
+    * still run Spark jobs over it.
     */
   def keys(spark: SparkSession, path: String): DataFrame =
     read(spark, path).select(col("timeframe"), col("symbol")).distinct()

@@ -2,8 +2,10 @@ package graft.serving
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.{ConcurrentLinkedQueue, Executor, Executors}
+import java.util.concurrent.atomic.AtomicInteger
 
-import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
+import com.sun.net.httpserver.{HttpContext, HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.model.CandleTimeFrame
@@ -29,11 +31,19 @@ import graft.operators.{CandleStore, Candles}
   *     CandleStickService.kt:176-196; truncated pages carry an
   *     X-Next-Key cursor reusable verbatim as the next `after`)
   *
-  * Serving is driver-side by design: each request is a
-  * partition-pruned read of one (timeframe, symbol) directory plus
-  * row-group pruning, so the collect returns a chart's worth of rows,
-  * not a scan. A production deployment would put a connection-pooled
+  * Serving is driver-side by design: each request reads only the
+  * store directories its timeframe and symbol name, plus row-group
+  * pruning, so the collect returns a chart's worth of rows, not a
+  * scan. A production deployment would put a connection-pooled
   * gateway in front of a long-lived SparkSession exactly like this.
+  *
+  * Requests run concurrently on a fixed pool of
+  * `spark.sparkContext.defaultParallelism` worker threads, one Spark
+  * job stream per worker. Every worker shares the one `SparkSession`
+  * passed to [[start]]; the handler only builds new DataFrames from
+  * it and never mutates its conf or catalog, so concurrent requests
+  * need no further locking. Stopping the returned server also shuts
+  * the pool down and waits for its threads to end.
   */
 object CandleHttpServer {
 
@@ -52,11 +62,43 @@ object CandleHttpServer {
     windowStartRe.findFirstMatchIn(rowJson).map(_.group(1))
 
   def start(spark: SparkSession, storePath: String, port: Int = 0): HttpServer = {
-    val server = HttpServer.create(new InetSocketAddress(port), 0)
+    val server = new PooledServer(HttpServer.create(new InetSocketAddress(port), 0),
+      spark.sparkContext.defaultParallelism)
     server.createContext("/", new Handler(spark, storePath))
-    server.setExecutor(null) // single-threaded: fine for a test gateway
     server.start()
     server
+  }
+
+  /** The JDK server running its exchanges on a fixed pool of `size`
+    * daemon threads named `graft-gateway-{port}-{n}`. [[stop]] also
+    * shuts the pool down, letting queued and running requests finish,
+    * and returns once every worker thread has ended.
+    */
+  private final class PooledServer(server: HttpServer, size: Int) extends HttpServer {
+    private val workers = new ConcurrentLinkedQueue[Thread]()
+    private val seq = new AtomicInteger()
+    private val pool = Executors.newFixedThreadPool(size, { (r: Runnable) =>
+      val t = new Thread(r, s"graft-gateway-${server.getAddress.getPort}-${seq.incrementAndGet()}")
+      t.setDaemon(true)
+      workers.add(t)
+      t
+    })
+    server.setExecutor(pool)
+
+    override def stop(delay: Int): Unit =
+      try server.stop(delay)
+      finally { pool.shutdown(); workers.forEach(_.join()) }
+    override def bind(addr: InetSocketAddress, backlog: Int): Unit =
+      server.bind(addr, backlog)
+    override def start(): Unit = server.start()
+    override def setExecutor(executor: Executor): Unit = server.setExecutor(executor)
+    override def getExecutor: Executor = server.getExecutor
+    override def createContext(path: String, handler: HttpHandler): HttpContext =
+      server.createContext(path, handler)
+    override def createContext(path: String): HttpContext = server.createContext(path)
+    override def removeContext(path: String): Unit = server.removeContext(path)
+    override def removeContext(context: HttpContext): Unit = server.removeContext(context)
+    override def getAddress: InetSocketAddress = server.getAddress
   }
 
   private final class Handler(spark: SparkSession, storePath: String)

@@ -1,14 +1,20 @@
 package graft
 
-import java.net.URI
+import java.net.{HttpURLConnection, URI}
 import java.nio.file.Files
+import java.sql.Timestamp
+import java.util.concurrent.Executors
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
 import scala.io.Source
+import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
-import graft.model.CandleTimeFrame
-import graft.operators.{Candles, CandleStore}
+import graft.model.{CandleTimeFrame, StockTransaction}
+import graft.operators.{CandleQueries, Candles, CandleStore}
 import graft.serving.CandleHttpServer
 import graft.streaming.TransactionSimulator
 
@@ -254,5 +260,131 @@ class HttpServingSpec extends SparkSpec {
       assert(next != null && next.startsWith("2024-01-01T02:00:00"),
         s"cursor should be the first unreturned filled slot, got $next")
     } finally server.stop(0)
+  }
+
+  /** Status and body of a GET whose path may hold characters that
+    * need URL quoting (the multi-argument URI constructor quotes them).
+    */
+  private def fetch(port: Int, path: String, query: String = null): (Int, String) = {
+    val conn = new URI("http", null, "localhost", port, path, query, null).toURL
+      .openConnection().asInstanceOf[HttpURLConnection]
+    val code = conn.getResponseCode
+    val in = if (code < 400) conn.getInputStream else conn.getErrorStream
+    val src = Source.fromInputStream(in, "UTF-8")
+    try (code, src.mkString) finally src.close()
+  }
+
+  private def jsonRows(df: DataFrame): String =
+    df.select(Candles.candleColumns: _*).toJSON.collect().mkString("[", ",", "]")
+
+  private def gatewayThreads(port: Int): Set[Thread] =
+    Thread.getAllStackTraces.keySet.asScala.toSet
+      .filter(_.getName.startsWith(s"graft-gateway-$port-"))
+
+  test("an unknown symbol or a missing timeframe serves 200 [] on every route") {
+    val dir = Files.createTempDirectory("http-absent-store").toString
+    // the store lacks the whole HOUR timeframe
+    CandleStore.write(
+      Candles.multiTimeframe(TransactionSimulator.batch(spark, 300))
+        .filter(col("timeframe") =!= CandleTimeFrame.Hour), dir)
+    assert(!new java.io.File(s"$dir/timeframe=HOUR").exists())
+    val server = CandleHttpServer.start(spark, dir)
+    val port = server.getAddress.getPort
+    try {
+      for ((sym, tf) <- Seq("ZZZZ" -> CandleTimeFrame.Minute, "AAPL" -> CandleTimeFrame.Hour)) {
+        val range = "from=2024-01-01 00:00:00&to=2024-01-02 00:00:00"
+        for ((path, query) <- Seq(
+            s"/candles/$sym/$tf" -> range,
+            s"/candles/$sym/$tf" -> s"$range&fill=true",
+            s"/candles/$sym/$tf/recent" -> "n=3",
+            s"/candles/$sym/$tf/point" -> "key=202401010002",
+            s"/keys/$sym/$tf" -> null)) {
+          assert(fetch(port, path, query) === (200, "[]"), s"$path?$query")
+        }
+      }
+      assert(fetch(port, "/keys/ZZZZ") === (200, "[]"))
+      // the other timeframes still serve
+      assert(fetch(port, "/candles/AAPL/MINUTE/recent", "n=3")._2.contains("AAPL"))
+    } finally server.stop(0)
+  }
+
+  test("symbols that need path escaping, or look numeric, serve what CandleQueries computes") {
+    def t(s: String) = Timestamp.valueOf(s)
+    // a store of numeric-looking symbols only: inferring partition
+    // types from its directories would turn 0700 into the int 700
+    for (symbols <- Seq(Seq("A:B", "A%B", "A B", "A=B"), Seq("0700", "0005"))) {
+      val txns = symbols.zipWithIndex.flatMap { case (sym, i) =>
+        Seq(StockTransaction(sym, 10.0 + i, 5, t("2024-01-02 09:30:10")),
+          StockTransaction(sym, 11.0 + i, 2, t("2024-01-02 09:31:20")),
+          StockTransaction(sym, 9.0 + i, 1, t("2024-01-03 14:05:00")))
+      }.toDF()
+      val mem = Candles.multiTimeframe(txns).persist()
+      val dir = Files.createTempDirectory("http-escaped-store").toString
+      CandleStore.write(mem, dir)
+      val server = CandleHttpServer.start(spark, dir)
+      val port = server.getAddress.getPort
+      try {
+        for (sym <- symbols; tf <- Seq(CandleTimeFrame.Minute, CandleTimeFrame.Day)) {
+          val (from, to) = ("2024-01-01 00:00:00", "2024-02-01 00:00:00")
+          val range = fetch(port, s"/candles/$sym/$tf", s"from=$from&to=$to")
+          assert(range === (200, jsonRows(CandleQueries.range(mem, sym, tf, from, to))),
+            s"range $sym $tf")
+          assert(range._2.contains(s""""symbol":"$sym""""))
+
+          val key = "202401020931".take(CandleTimeFrame.keyFormat(tf).length)
+          val point = fetch(port, s"/candles/$sym/$tf/point", s"key=$key")
+          assert(point === (200, jsonRows(CandleQueries.pointLookup(mem, sym, tf, key))),
+            s"point $sym $tf")
+          assert(point._2 != "[]")
+
+          val keys = mem.filter(col("symbol") === sym && col("timeframe") === tf)
+            .select(Candles.candleKeyDynamic.as("key")).orderBy("key")
+            .collect().map(k => "\"" + k.getString(0) + "\"").mkString("[", ",", "]")
+          assert(fetch(port, s"/keys/$sym/$tf") === (200, keys), s"keys $sym $tf")
+        }
+      } finally { server.stop(0); mem.unpersist() }
+    }
+  }
+
+  test("concurrent clients get the bodies they get alone, and stop releases the worker pool") {
+    val dir = Files.createTempDirectory("http-concurrent-store").toString
+    CandleStore.write(Candles.multiTimeframe(TransactionSimulator.batch(spark, 300)), dir)
+    val server = CandleHttpServer.start(spark, dir)
+    val port = server.getAddress.getPort
+    val requests = for {
+      sym <- Seq("AAPL", "MSFT")
+      req <- Seq(
+        s"/candles/$sym/MINUTE" -> "from=2024-01-01 00:00:00&to=2024-01-02 00:00:00",
+        s"/candles/$sym/HOUR" -> "from=2024-01-01 00:00:00&to=2024-01-02 00:00:00&fill=true",
+        s"/candles/$sym/MINUTE/recent" -> "n=5",
+        s"/candles/$sym/DAY/recent" -> "n=2",
+        s"/candles/$sym/MINUTE/point" -> "key=202401010002",
+        s"/keys/$sym/HOUR" -> "limit=50")
+    } yield req
+    val clients = 2 * Runtime.getRuntime.availableProcessors
+    val clientPool = Executors.newFixedThreadPool(clients)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(clientPool)
+    try {
+      val alone = requests.map { case (p, q) => fetch(port, p, q) }
+      assert(alone.forall(_._1 == 200) && alone.count(_._2 != "[]") > requests.size / 2)
+      // every client walks the whole sequence from its own offset, so
+      // each request overlaps different routes
+      val runs = (0 until clients).map { c =>
+        Future {
+          requests.indices.map { k =>
+            val i = (k + c) % requests.size
+            i -> fetch(port, requests(i)._1, requests(i)._2)
+          }
+        }
+      }
+      Await.result(Future.sequence(runs), 5.minutes).flatten.foreach { case (i, got) =>
+        assert(got === alone(i), s"concurrent ${requests(i)} differs from its lone reply")
+      }
+      assert(gatewayThreads(port).size === spark.sparkContext.defaultParallelism)
+    } finally {
+      clientPool.shutdown()
+      server.stop(0)
+    }
+    assert(gatewayThreads(port).isEmpty, "gateway worker threads outlived stop")
   }
 }
