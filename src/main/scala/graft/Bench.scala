@@ -7,29 +7,12 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      // SPARK_GRAFT_MASTER: multi-JVM audits (see Verify); unset by
-      // the driver, so the graded path stays local[cpus]
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // SPARK_GRAFT_MAX_PART_BYTES: scan-split size. Spark's 128 MiB
-      // default is sized for cluster-scale files; at sf1/sf10 the
-      // whole table fits in 1-10 default splits and local[32] scans
-      // run 3-30x under-parallel. Unset ⇒ Spark default (the graded
-      // sf0.1 path is unchanged); big-SF sweeps set e.g. 8m.
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", "128m"))
+    val spark = Measure.session(
       // the default 100-entry generated-class cache evicts across a
       // 119-query run, so late queries pay full codegen compile on
       // BOTH timed runs (measured q_winnow: 4.3 s evicted vs 1.0 s
       // warm) — size it to hold the whole suite
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.codegen.cache.maxEntries" -> "5000")
 
     // JVM/codegen warmup so the first measured query isn't charged for
     // JIT + classloading (measures the engine, not the JVM cold start)
@@ -84,35 +67,20 @@ object Bench {
     // two timed runs per query, keep the min: steady-state cost, not
     // whichever run ate the JIT/GC noise. A failed run must NOT pollute
     // the series with its failure latency (-1), and a HUNG query must
-    // not stall the whole sweep — each run sits under a watchdog that
-    // cancels its job group on timeout.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration._
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val timeoutS = sys.env.getOrElse("SPARK_GRAFT_TIMEOUT_S", "900").toLong
-    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      val group = s"bench-$name"
-      val run = Future {
-        spark.sparkContext.setJobGroup(group, name, interruptOnCancel = true)
-        // noop sink: full materialization of every output column
-        // (count() alone would let Spark prune the projections away)
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        finally spark.sparkContext.clearJobGroup()
-      }
-      try {
-        Await.result(run, timeoutS.seconds)
-        (System.nanoTime() - t0) / 1e9
-      } catch {
-        case _: java.util.concurrent.TimeoutException =>
-          spark.sparkContext.cancelJobGroup(group)
-          System.err.println(s"[bench] $name timed out after ${timeoutS}s")
-          -1.0
-        case NonFatal(e) =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+    // not stall the whole sweep — each run sits under Measure's
+    // watchdog, which cancels its job group on timeout.
+    val timeoutS = Measure.timeoutS(900)
+    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double =
+      // noop sink: full materialization of every output column
+      // (count() alone would let Spark prune the projections away)
+      Measure.run(spark, s"bench-$name", timeoutS) {
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      } match {
+        case Right(secs) => secs
+        case Left(msg) =>
+          System.err.println(s"[bench] $name failed: $msg")
           -1.0
       }
-    }
     // local-iteration aid (mirrors Verify): SPARK_GRAFT_ONLY=q_a,q_b
     // restricts the sweep; the driver never sets it
     val only = sys.env.get("SPARK_GRAFT_ONLY")

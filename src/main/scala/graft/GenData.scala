@@ -98,7 +98,7 @@ object GenData {
     * [[zipf]] hot-key distribution at that sharpness, leaving every
     * OTHER column's value distribution and all schemas/encodings
     * identical — the uniform-vs-skew A/B the AQE skew-join claims
-    * are measured on (graft.SkewBench). 1 = realistic Zipf traffic;
+    * are measured on (BENCH_SCALING.md). 1 = realistic Zipf traffic;
     * 2 = single-whale key for exercising the AQE skew-split bar.
     */
   def generate(spark: SparkSession, outDir: String, sf: Double,
@@ -299,7 +299,7 @@ object GenData {
     * a realistic df CONTINUUM (common-word grams repeat hundreds of
     * times, rare-word grams are unique), which is the regime where
     * df caps genuinely trade recall for work and the recall gates
-    * produce a curve instead of a constant (graft.RecallBench).
+    * produce a curve instead of a constant (RECALL_COHORT_r11–r13.json).
     */
   def documents(spark: SparkSession, n: Long,
                 skewed: Int = 0, zipfVocab: Boolean = false,

@@ -15,7 +15,7 @@ object PlanDump {
     val runFirst = sys.env.get("SPARK_GRAFT_FINAL").contains("1")
     args.foreach { name =>
       println(s"\n## $name\n")
-      // "_"-prefixed stage-split targets (Prof convention): plans of
+      // "_"-prefixed stage-split targets: plans of
       // operator internals the query-level explain can't show because
       // the enclosing loop materializes eagerly
       val fn: (SparkSession, String) => org.apache.spark.sql.DataFrame =

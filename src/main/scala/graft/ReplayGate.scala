@@ -445,7 +445,8 @@ object ReplayGate {
       .config("spark.ui.enabled", "false")
     // SPARK_GRAFT_STATE_PROVIDER=rocksdb_tuned runs the stateful
     // scenario on the PRODUCTION state-store config (RocksDB +
-    // changelog checkpointing — StateBench's recommended knobs):
+    // changelog checkpointing — the knobs STATEBENCH_r10/r11.json
+    // recommend):
     // changelog checkpointing replaces full-snapshot uploads with
     // per-batch deltas, i.e. a DIFFERENT rollback/replay mechanism
     // than the default HDFS-backed store, so the crash/restart gate

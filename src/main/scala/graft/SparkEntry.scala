@@ -2863,7 +2863,7 @@ object SparkEntry {
       // asymmetric binary ANN: query magnitudes scored against the
       // same 1-bit index (integer-exact dot(micro(q), sign(c)) —
       // native SignDot); recall 0.60 vs 0.51 symmetric at
-      // 512k/coarseK=5000 (AnnBench — collision-bounded at dim 64,
+      // 512k/coarseK=5000 (ANNBENCH_r13.json — collision-bounded at dim 64,
       // see Similarity.annBinaryAsym)
       val emb = Tables.embeddings(s, dir)
       Similarity.annBinaryAsym(emb, emb.filter(col("vec_id") < 3),

@@ -1,34 +1,20 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER lets the multi-JVM audit run the same gate
-    // under local-cluster[n,c,m] (real Netty shuffles + serialized
-    // broadcasts); executor-side confs ride in as -Dspark.* sysprops.
-    // The driver never sets it, so the contract is unchanged.
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      // plan-shape invariance knobs for the determinism gates (driver
-      // never sets either, contract unchanged): every query's OUTPUT
-      // must be identical with AQE disabled and under any shuffle
-      // partition count — a value that depends on either is a
-      // partial-aggregation-order bug waiting for a cluster.
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      // scan-split size; unset ⇒ Spark default (see Bench)
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", "128m"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // plan-shape invariance knobs for the determinism gates (unset by
+    // default, so the dump's contract is unchanged): every query's OUTPUT
+    // must be identical with AQE disabled and under any shuffle
+    // partition count — a value that depends on either is a
+    // partial-aggregation-order bug waiting for a cluster.
+    val overrides = Seq(
+      "SPARK_GRAFT_SHUFFLE_PARTITIONS" -> "spark.sql.shuffle.partitions",
+      "SPARK_GRAFT_AQE" -> "spark.sql.adaptive.enabled")
+      .flatMap { case (env, key) => sys.env.get(env).map(key -> _) }
+    val spark = Measure.session(overrides: _*)
     // sampled-cohort big-SF gate (Tables.maybeSample scaladoc): the
     // engine dump and the DuckDB compare (check_ckpt --sample-mod)
     // restrict the corpus tables to id % k == 0 in lockstep. The
@@ -54,10 +40,7 @@ object Verify {
     // worse still — no sidecar, no output, the whole gate stalls — so
     // each query runs under a watchdog: on timeout its Spark job group
     // is cancelled, the failure is recorded, and the dump moves on.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration._
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val timeoutS = sys.env.getOrElse("SPARK_GRAFT_TIMEOUT_S", "1800").toLong
+    val timeoutS = Measure.timeoutS(1800)
     val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
     // An ExactScale refusal is the DESIGNED outcome when a corpus-sized
     // input reaches an exact Θ(n²) ground-truth path (sf10: documents
@@ -89,23 +72,10 @@ object Verify {
       if (resume && alreadyDumped(name)) {
         System.err.println(s"[verify] $name skipped (resume: dump exists)")
       } else {
-      val group = s"verify-$name"
-      val run = Future {
-        // job group is thread-local: set it on the thread that fires
-        // the Spark actions so cancelJobGroup reaches them
-        spark.sparkContext.setJobGroup(group, name, interruptOnCancel = true)
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+      Measure.run(spark, s"verify-$name", timeoutS) {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
-        finally spark.sparkContext.clearJobGroup()
-      }
-      try Await.result(run, timeoutS.seconds)
-      catch {
-        case _: java.util.concurrent.TimeoutException =>
-          spark.sparkContext.cancelJobGroup(group)
-          fail(name, s"timed out after ${timeoutS}s (job group cancelled)")
-        case e: Throwable =>
-          fail(name, Option(e.getMessage).getOrElse(e.getClass.getName))
-      }
+      }.left.foreach(fail(name, _))
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

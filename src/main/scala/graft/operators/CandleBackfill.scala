@@ -31,10 +31,6 @@ object CandleBackfill {
           force: Seq[String] = Nil): Seq[String] = {
     val eventDays = EventStore.dates(spark, eventStorePath)
       .withColumnRenamed("event_date", "d")
-    val storePath = new org.apache.hadoop.fs.Path(candleStorePath)
-    val fs = storePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val storeHasData = fs.exists(storePath) &&
-      fs.listStatus(storePath).exists(_.getPath.getName.startsWith("timeframe="))
     // a day is "done" only when its DAY candle exists: cascadeMerge
     // writes minute candles first and the hour/day/month rollups in a
     // second merge, so judging by the rollup (written last) makes an
@@ -44,7 +40,8 @@ object CandleBackfill {
     // written after that day's minute merge, so DAY coverage is exactly
     // the set of fully-cascaded days.)
     val doneDays =
-      if (!storeHasData) eventDays.filter(lit(false)).select(col("d"))
+      if (!CandleStore.hasData(spark, candleStorePath))
+        eventDays.filter(lit(false)).select(col("d"))
       else CandleStore.read(spark, candleStorePath)
         .filter(col("timeframe") === CandleTimeFrame.Day)
         .select(col("window_date").as("d")).distinct()

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
@@ -56,6 +56,23 @@ object CandleStore {
 
   private val candleSchema = Encoders.product[Candle].schema
 
+  /** True when `path` exists and holds at least one `timeframe=`
+    * partition directory. The check goes through the Hadoop FileSystem
+    * API so HDFS/S3 store paths behave like local ones (a java.io.File
+    * check would report "empty" there, and a merge would then
+    * overwrite partitions without their unchanged rows).
+    */
+  private[graft] def hasData(spark: SparkSession, path: String): Boolean = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.exists(root) && timeframeDirs(fs, root).nonEmpty
+  }
+
+  /** The `timeframe=…` partition directories directly under `root`. */
+  private def timeframeDirs(fs: FileSystem, root: Path): Seq[Path] =
+    fs.listStatus(root).toSeq.map(_.getPath)
+      .filter(_.getName.startsWith("timeframe="))
+
   /** The store restricted to the `timeframe=…/symbol=…` directories
     * that `tf` and `symbol` name (an absent filter spans every stored
     * value), read with the model schema. Directory names are escaped
@@ -71,8 +88,7 @@ object CandleStore {
       new Path(parent, ExternalCatalogUtils.getPartitionPathString(column, value))
     val tfDirs = tf match {
       case Some(t) => Seq(dir(root, "timeframe", t))
-      case None => fs.listStatus(root).toSeq.map(_.getPath)
-        .filter(_.getName.startsWith("timeframe="))
+      case None => timeframeDirs(fs, root)
     }
     val dirs = symbol.fold(tfDirs)(s => tfDirs.map(dir(_, "symbol", s)))
       .filter(fs.exists)

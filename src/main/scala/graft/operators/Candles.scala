@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.CandleTimeFrame
@@ -47,15 +47,7 @@ object Candles {
     */
   def minuteCandles(txns: DataFrame): DataFrame = {
     val ws = date_trunc("minute", col("ts"))
-    txns
-      .groupBy(col("symbol"), ws.as("window_start"))
-      .agg(
-        min_by(col("price"), col("ts")).as("open"),
-        max(col("price")).as("high"),
-        min(col("price")).as("low"),
-        max_by(col("price"), col("ts")).as("close"),
-        sum(col("quantity")).cast("long").as("volume"),
-        count(lit(1)).as("n_txn"))
+    tradeOhlcv(txns.groupBy(col("symbol"), ws.as("window_start")))
       .withColumn("timeframe", lit(CandleTimeFrame.Minute))
       .withColumn("window_end", windowEnd(CandleTimeFrame.Minute, col("window_start")))
       .select(candleColumns: _*)
@@ -69,16 +61,9 @@ object Candles {
     */
   def rollup(candles: DataFrame, tf: String): DataFrame = {
     val unit = CandleTimeFrame.truncUnit(tf)
-    candles
+    candleOhlcv(candles
       .withColumn("parent_start", date_trunc(unit, col("window_start")))
-      .groupBy(col("symbol"), col("parent_start"))
-      .agg(
-        min_by(col("open"), col("window_start")).as("open"),
-        max(col("high")).as("high"),
-        min(col("low")).as("low"),
-        max_by(col("close"), col("window_start")).as("close"),
-        sum(col("volume")).cast("long").as("volume"),
-        sum(col("n_txn")).as("n_txn"))
+      .groupBy(col("symbol"), col("parent_start")))
       .withColumnRenamed("parent_start", "window_start")
       .withColumn("timeframe", lit(tf))
       .withColumn("window_end", windowEnd(tf, col("window_start")))
@@ -109,17 +94,10 @@ object Candles {
         Seq(CandleTimeFrame.Hour, CandleTimeFrame.Day, CandleTimeFrame.Month).map(tf =>
           struct(lit(tf).as("tf"),
             date_trunc(CandleTimeFrame.truncUnit(tf), col("window_start")).as("ps"))): _*))
-    minuteCandles(txns)
+    candleOhlcv(minuteCandles(txns)
       .select(col("symbol"), col("window_start"), col("open"), col("high"),
         col("low"), col("close"), col("volume"), col("n_txn"), tfKey.as("k"))
-      .groupBy(col("symbol"), col("k.tf").as("timeframe"), col("k.ps").as("parent_start"))
-      .agg(
-        min_by(col("open"), col("window_start")).as("open"),
-        max(col("high")).as("high"),
-        min(col("low")).as("low"),
-        max_by(col("close"), col("window_start")).as("close"),
-        sum(col("volume")).cast("long").as("volume"),
-        sum(col("n_txn")).as("n_txn"))
+      .groupBy(col("symbol"), col("k.tf").as("timeframe"), col("k.ps").as("parent_start")))
       .withColumnRenamed("parent_start", "window_start")
       .withColumn("window_end", windowEndDynamic)
       .select(candleColumns: _*)
@@ -138,17 +116,10 @@ object Candles {
     * calendar frames). Same cascade semantics as rollup().
     */
   def rollupInterval(candles: DataFrame, seconds: Long): DataFrame =
-    candles
+    candleOhlcv(candles
       .withColumn("parent_start",
         timestamp_seconds(expr(s"unix_timestamp(window_start) div $seconds") * seconds))
-      .groupBy(col("symbol"), col("parent_start"))
-      .agg(
-        min_by(col("open"), col("window_start")).as("open"),
-        max(col("high")).as("high"),
-        min(col("low")).as("low"),
-        max_by(col("close"), col("window_start")).as("close"),
-        sum(col("volume")).cast("long").as("volume"),
-        sum(col("n_txn")).as("n_txn"))
+      .groupBy(col("symbol"), col("parent_start")))
       .withColumnRenamed("parent_start", "window_start")
       .withColumn("timeframe", lit(s"${seconds}s"))
       .withColumn("window_end", col("window_start") + expr(s"INTERVAL $seconds SECOND"))
@@ -167,16 +138,8 @@ object Candles {
   def hopCandles(txns: DataFrame, widthSeconds: Long, slideSeconds: Long): DataFrame = {
     require(widthSeconds % slideSeconds == 0,
       "width must be a multiple of slide (calendar-aligned hop windows)")
-    txns
-      .groupBy(col("symbol"),
-        window(col("ts"), s"$widthSeconds seconds", s"$slideSeconds seconds"))
-      .agg(
-        min_by(col("price"), col("ts")).as("open"),
-        max(col("price")).as("high"),
-        min(col("price")).as("low"),
-        max_by(col("price"), col("ts")).as("close"),
-        sum(col("quantity")).cast("long").as("volume"),
-        count(lit(1)).as("n_txn"))
+    tradeOhlcv(txns.groupBy(col("symbol"),
+        window(col("ts"), s"$widthSeconds seconds", s"$slideSeconds seconds")))
       .withColumn("timeframe", lit(s"${widthSeconds}s/${slideSeconds}s"))
       .select(col("symbol"), col("timeframe"),
         col("window.start").as("window_start"),
@@ -262,6 +225,35 @@ object Candles {
       .withColumn("is_gap", col("close").isNull)
       .withColumn("volume", coalesce(col("volume"), lit(0L)))
   }
+
+  /** OHLCV of raw trades `(price, quantity, ts)` per group: open and
+    * close are the event-time first and last price. The one aggregate
+    * list of [[minuteCandles]], [[hopCandles]] and
+    * `CandleStream.candles`.
+    */
+  private[graft] def tradeOhlcv(trades: RelationalGroupedDataset): DataFrame =
+    trades.agg(
+      min_by(col("price"), col("ts")).as("open"),
+      max(col("price")).as("high"),
+      min(col("price")).as("low"),
+      max_by(col("price"), col("ts")).as("close"),
+      sum(col("quantity")).cast("long").as("volume"),
+      count(lit(1)).as("n_txn"))
+
+  /** OHLCV of child candles per parent group — the reference's
+    * aggregateCandles (kt:318-339): open of the earliest child, close
+    * of the latest, high/low = max/min, volume and n_txn summed. The
+    * one aggregate list of [[rollup]], [[rollupInterval]] and
+    * [[multiTimeframe]].
+    */
+  private def candleOhlcv(children: RelationalGroupedDataset): DataFrame =
+    children.agg(
+      min_by(col("open"), col("window_start")).as("open"),
+      max(col("high")).as("high"),
+      min(col("low")).as("low"),
+      max_by(col("close"), col("window_start")).as("close"),
+      sum(col("volume")).cast("long").as("volume"),
+      sum(col("n_txn")).as("n_txn"))
 
   /** Exclusive end of the calendar window that starts at `start`. */
   def windowEnd(tf: String, start: Column): Column = tf match {

@@ -976,6 +976,12 @@ object Curation {
     * exactly once. The weight pass ([[dsirWeightsFromCounts]]) then
     * reads only this compact table (≲ one row per token, usually far
     * fewer), never the text.
+    *
+    * Precondition: `docs` holds one row per doc_id. The histogram is
+    * computed per row, so duplicate doc_id rows come out as separate
+    * (doc_id, is_t, b, n) rows rather than one merged row.
+    * [[dsirWeightsFromCounts]] sums them, so weights are unaffected,
+    * but a [[DsirStore]] fold would persist the unmerged rows.
     */
   def dsirCountTable(docs: DataFrame, isTarget: Column,
                      buckets: Int = 256, textCol: String = "text"): DataFrame = {

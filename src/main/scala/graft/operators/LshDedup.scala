@@ -323,8 +323,8 @@ object LshDedup {
     */
   /** Above this input size the prefix miner is the default; at or
     * below it the counted miner wins. Measured A/B
-    * (graft.JaccardBench, quiet machine, min-of-two): at sf1 = 50k
-    * docs prefix wins big — t=0.8 counted 61.0 s vs prefix 7.3 s
+    * (BENCH_SCALING.md, OPTIMIZATION_r16.md; quiet machine,
+    * min-of-two): at sf1 = 50k docs prefix wins big — t=0.8 counted 61.0 s vs prefix 7.3 s
     * (8.4×), t=0.2 counted 140.4 s vs prefix 63.4 s (2.2×) — but at
     * sf0.1 = 5k docs counted wins by ≤ 0.9 s at both thresholds: the
     * prefix path's two frequency-ranking shuffles of the (shingle,
@@ -1205,9 +1205,8 @@ object LshDedup {
     * Σ n_i² over terminal cores (n_i ≤ maxEnum) + output-sized
     * expansion. The round-11 envelope (default lossless at 50k,
     * 0.578 at 500k, quadratic buy-back, 8000-cap OOM) was measured
-    * on the two-level doc-grain form this replaces; RecallBench's
-    * depth sweep re-measures this form at both scales
-    * (RECALL_COHORT_r12).
+    * on the two-level doc-grain form this replaces; the depth sweep
+    * in RECALL_COHORT_r12.json re-measures this form at both scales.
     */
   def simhashCandidatesCapped(docs: DataFrame, maxHamming: Int = 3,
                               maxBucket: Int = 2000,

@@ -126,7 +126,7 @@ object Similarity {
 
   /** [[annInt8]] against prebuilt index artifacts (the quantized
     * table + its scales) — the serving path; training/encode cost
-    * excluded (AnnBench measures the build/query split).
+    * excluded (the build/query split is measured in ANNBENCH_r13.json).
     */
   def annInt8With(qv: DataFrame, scales: DataFrame,
                   vectors: DataFrame, queries: DataFrame,
@@ -247,6 +247,14 @@ object Similarity {
     * vec_id, is a corpus×corpus shuffle. r16: the row-exploded form
     * is a posexplode over [[pqEncodeArr]]'s map-side argmin — no
     * exchange of the code table at all (was one per encode).
+    *
+    * Precondition: `codebook` is non-empty. An empty codebook still
+    * aggregates to one broadcast row with an empty centroid array, so
+    * every vector would get `nSub` rows with a null `code` (the
+    * pre-r16 broadcast join returned an empty frame instead).
+    * [[annPq]] and [[annIvfPq]] train the codebook on the corpus, so
+    * a non-empty corpus always satisfies this; callers passing their
+    * own codebook must check it.
     */
   def pqEncode(qv: DataFrame, codebook: DataFrame, nSub: Int,
                subDim: Int, carry: Seq[String] = Nil): DataFrame =
@@ -779,7 +787,7 @@ object Similarity {
     * counting per-dimension sign mismatches reproduces the coarse
     * stage bit-for-bit.
     *
-    * Measured envelope (AnnBench, GenData clustered vectors, 512k ×
+    * Measured envelope (ANNBENCH_r13.json, GenData clustered vectors, 512k ×
     * 64 queries): recall\@10 tops out ~0.51 at coarseK=5000 — and the
     * obvious "too few dims" explanation was TESTED AND REFUTED: at
     * dim 64 sign patterns do collide (325k distinct / 512k, hot
@@ -807,7 +815,7 @@ object Similarity {
 
   /** The binary index artifact: (vec_id, sig) with sig = packed sign
     * bits. 8 bytes/vector at dim 64 — persist at ingest, reuse per
-    * query batch (AnnBench measures the build/query split).
+    * query batch (the build/query split is measured in ANNBENCH_r13.json).
     */
   def signIndex(vectors: DataFrame): DataFrame =
     vectors.select(col("vec_id"), sign_bits(col("embedding")).as("sig"))
@@ -851,7 +859,7 @@ object Similarity {
     * keeps them (the same trick as PQ's asymmetric distance
     * computation).
     *
-    * Measured envelope (AnnBench, 512k×64-dim GenData vectors, 64
+    * Measured envelope (ANNBENCH_r13.json, 512k×64-dim GenData vectors, 64
     * queries): recall\@10 0.60 asym vs 0.51 sym at coarseK=5000 —
     * an upgrade, but BOUNDED by signature collisions: the 512k
     * corpus collapses to 325k distinct sign patterns with hot

@@ -201,15 +201,19 @@ object CandleHttpServer {
       * timeframe), so they must be JSON-escaped or a quote in the input
       * would yield an invalid response body.
       */
-    private def errorJson(msg: String): String = {
-      val escaped = Option(msg).getOrElse("").flatMap {
+    private def errorJson(msg: String): String =
+      "{\"error\":" + jsonString(Option(msg).getOrElse("")) + "}"
+
+    /** `s` as a quoted JSON string: quote, backslash and control
+      * characters escaped.
+      */
+    private def jsonString(s: String): String =
+      "\"" + s.flatMap {
         case '"'  => "\\\""
         case '\\' => "\\\\"
         case c if c < ' ' => f"\\u${c.toInt}%04x"
         case c => c.toString
-      }
-      s"""{"error":"$escaped"}"""
-    }
+      } + "\""
 
     private def requireTf(tf: String): Unit =
       require(CandleTimeFrame.all.contains(tf),
@@ -248,15 +252,7 @@ object CandleHttpServer {
       * escape anyway so a hostile symbol value can't break the body.
       */
     private def toJsonStringArray(keys: Seq[String]): String =
-      keys.map { k =>
-        val s = k.flatMap {
-          case '"'  => "\\\""
-          case '\\' => "\\\\"
-          case c if c < ' ' => f"\\u${c.toInt}%04x"
-          case c => c.toString
-        }
-        "\"" + s + "\""
-      }.mkString("[", ",", "]")
+      keys.map(jsonString).mkString("[", ",", "]")
 
     private def respond(ex: HttpExchange, code: Int, body: String): Unit = {
       val bytes = body.getBytes(StandardCharsets.UTF_8)

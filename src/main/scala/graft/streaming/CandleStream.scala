@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.model.CandleTimeFrame
-import graft.operators.Candles
+import graft.operators.{CandleStore, Candles}
 
 /** Structured Streaming candlestick pipeline — the direct analog of
   * the reference's Kafka Streams topology
@@ -129,16 +129,9 @@ object CandleStream {
       case CandleTimeFrame.Month  => window(col("ts"), "30 days")
       case other => throw new IllegalArgumentException(s"unknown timeframe: $other")
     }
-    txns
+    Candles.tradeOhlcv(txns
       .withWatermark("ts", watermark)
-      .groupBy(winExpr.as("w"), col("symbol"))
-      .agg(
-        min_by(col("price"), col("ts")).as("open"),
-        max(col("price")).as("high"),
-        min(col("price")).as("low"),
-        max_by(col("price"), col("ts")).as("close"),
-        sum(col("quantity")).cast("long").as("volume"),
-        count(lit(1)).as("n_txn"))
+      .groupBy(winExpr.as("w"), col("symbol")))
       .withColumn("timeframe", lit(tf))
       .withColumn("window_start", col("w.start"))
       .withColumn("window_end", col("w.end"))
@@ -192,10 +185,7 @@ object CandleStream {
   /** Merge one candle batch into the partitioned store: rewrite
     * exactly the affected (timeframe, symbol, window_date) partitions
     * via dynamic partition overwrite, carrying their unchanged rows.
-    * The existence check goes through the Hadoop FileSystem API so
-    * HDFS/S3 store paths behave identically to local ones (a
-    * java.io.File check would silently report "empty" there and the
-    * overwrite would drop unchanged rows).
+    * The existence check is [[CandleStore.hasData]].
     */
   def mergeBatchIntoStore(rawBatch: DataFrame, path: String): Unit = {
     val spark = rawBatch.sparkSession
@@ -206,11 +196,7 @@ object CandleStream {
     // rows too, so read them back (partition-pruned via the semi-join
     // on the tiny affected-partition key set), drop rows superseded by
     // this batch, and union the new versions
-    val storePath = new org.apache.hadoop.fs.Path(path)
-    val fs = storePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val storeHasData = fs.exists(storePath) &&
-      fs.listStatus(storePath).exists(_.getPath.getName.startsWith("timeframe="))
-    val merged = if (!storeHasData) batch else {
+    val merged = if (!CandleStore.hasData(spark, path)) batch else {
       val affected = batch.select(partCols.map(col): _*).distinct()
       val existing = spark.read.parquet(path)
         .join(broadcast(affected), partCols, "left_semi")

@@ -38,7 +38,8 @@ object TransactionSimulator {
     * per event-second — so each micro-batch advances event time by
     * the same fixed span, watermarks march deterministically, and
     * windows close on a fixed per-batch cadence. One txn per symbol
-    * per tick, like [[stream]] (graft.StreamBench is the consumer).
+    * per tick, like [[stream]] (perfbench's `ingest` workload is the
+    * consumer).
     */
   def streamMicroBatch(spark: SparkSession, ticksPerBatch: Long,
                        ticksPerEventSecond: Long = 2048,
@@ -53,7 +54,7 @@ object TransactionSimulator {
         col("value")))
 
   /** User-grain source for state-cardinality benchmarks
-    * (graft.StateBench): one event per tick, `user_id = tick mod
+    * (STATEBENCH_r9–r15.json): one event per tick, `user_id = tick mod
     * nUsers` so exactly `min(nUsers, ticksPerBatch)` distinct state
     * keys are touched each micro-batch — the key-cardinality regime a
     * user-grain 100 TB stream puts on the state store (millions of
@@ -76,30 +77,6 @@ object TransactionSimulator {
         pmod(col("value"), lit(nUsers)).as("user_id"),
         // a payload column so the agg does real work per event
         (pmod(xxhash64(col("value")), lit(10000L)) / lit(100.0)).as("amount"))
-
-  /** Embedding-grain source for the streaming drift monitor's state
-    * bench (graft.StateBench workload `drift`): one vector per tick,
-    * `vec_id = tick`, `embedding` a deterministic `dims`-length
-    * array<float> hashed from (tick, position) in [-1, 1). The
-    * monitor's whole point is corpus-INDEPENDENT state (dims+1 rows
-    * however many vectors stream through), so unlike
-    * [[userStreamMicroBatch]] the interesting axis here is dims, not
-    * key cardinality — every batch touches all dims+1 state rows and
-    * throughput is decided by the posexplode fan-out (ticks × dims
-    * component rows per batch).
-    */
-  def embeddingStreamMicroBatch(spark: SparkSession, ticksPerBatch: Long,
-                                dims: Int): DataFrame =
-    spark.readStream.format("rate-micro-batch")
-      .option("rowsPerBatch", ticksPerBatch)
-      .option("numPartitions", spark.sparkContext.defaultParallelism)
-      .load()
-      .select(
-        col("value").as("vec_id"),
-        transform(sequence(lit(0), lit(dims - 1)),
-          i => ((pmod(xxhash64(col("value"), i), lit(2000000L))
-            - lit(1000000L)) / lit(1000000.0)).cast("float"))
-          .as("embedding"))
 
   /** Bounded batch variant for tests: `n` ticks starting at epoch
     * second `startEpoch`.

@@ -13,8 +13,8 @@ import org.apache.spark.shuffle.FetchFailedException
   * is the code path under test — unregister the map output, resubmit
   * the map stage, recompute partials, let zombie attempts race the
   * reattempt. A plain RuntimeException only exercises task-level
-  * retry. Like [[BusFlush]], this is a measurement shim for
-  * graft.RetryGate, not a production dependency.
+  * retry. This is a measurement shim for graft.RetryGate, not a
+  * production dependency.
   */
 object ChaosShim {
 

@@ -5,13 +5,13 @@ import org.apache.spark.sql.functions._
 import graft.streaming.TransactionSimulator
 
 /** Watermark eviction must BOUND streaming state at high key
-  * cardinality — the property StateBench measures at 10k–1M keys and
-  * a 100 TB user-grain stream lives or dies by. Without eviction the
-  * windowed-agg store accretes one row per key·window forever; with
-  * it, live rows plateau at ≈ keys × windows-in-flight no matter how
-  * many batches run.
+  * cardinality — the property STATEBENCH_r9–r15.json measure at
+  * 10k–1M keys and a 100 TB user-grain stream lives or dies by.
+  * Without eviction the windowed-agg store accretes one row per
+  * key·window forever; with it, live rows plateau at ≈ keys ×
+  * windows-in-flight no matter how many batches run.
   *
-  * Setup mirrors StateBench.build("window_agg") at spec scale:
+  * Setup mirrors the STATEBENCH `window_agg` workload at spec scale:
   * user-grain rate-micro-batch source (user_id = tick mod K), 30s
   * watermark, 1-minute windows. 200 ticks/event-second × 12000
   * ticks/batch ⇒ each batch advances event time 60s = exactly one
