@@ -350,17 +350,11 @@ object ReplayGate {
       .option("checkpointLocation", chk)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         batches.add(id)
-        // mergeBatchIntoStore references the batch in three subplans
-        // (affected-partition keys, superseded-row anti-join, union);
-        // unpersisted, each would re-run the stateful micro-batch plan
-        val candles = batch.persist()
-        try {
-          if (plan.fire(id, "pre"))
-            throw new InjectedCrash(s"$Marker (pre, batch $id)")
-          graft.streaming.CandleStream.mergeBatchIntoStore(candles, storePath)
-          if (plan.fire(id, "mid"))
-            throw new InjectedCrash(s"$Marker (mid, batch $id)")
-        } finally candles.unpersist()
+        if (plan.fire(id, "pre"))
+          throw new InjectedCrash(s"$Marker (pre, batch $id)")
+        graft.streaming.CandleStream.mergeBatchIntoStore(batch, storePath)
+        if (plan.fire(id, "mid"))
+          throw new InjectedCrash(s"$Marker (mid, batch $id)")
       }
       .start()
 

@@ -13,11 +13,12 @@ import graft.streaming.CandleStream
   * aggregate only the new days; never recompute history).
   *
   * Day detection is metadata-only on both sides: event days come from
-  * the event store's partition listing, done days from the candle
-  * store's window_date partition column. The day is the unit of
-  * increment — events appended late into an already-processed day are
-  * picked up by re-merging that day explicitly (pass `force`), the
-  * same restatement lever every day-partitioned warehouse has.
+  * the event store's partition listing, done days from a listing of
+  * the candle store's DAY `window_date=` directories (no Spark job).
+  * The day is the unit of increment — events appended late into an
+  * already-processed day are picked up by re-merging that day
+  * explicitly (pass `force`), the same restatement lever every
+  * day-partitioned warehouse has.
   *
   * The event store rows must carry the transaction shape
   * (symbol, price, quantity, ts).
@@ -29,8 +30,6 @@ object CandleBackfill {
     */
   def run(spark: SparkSession, eventStorePath: String, candleStorePath: String,
           force: Seq[String] = Nil): Seq[String] = {
-    val eventDays = EventStore.dates(spark, eventStorePath)
-      .withColumnRenamed("event_date", "d")
     // a day is "done" only when its DAY candle exists: cascadeMerge
     // writes minute candles first and the hour/day/month rollups in a
     // second merge, so judging by the rollup (written last) makes an
@@ -39,16 +38,11 @@ object CandleBackfill {
     // (A DAY candle's window_date IS the day, and it can only be
     // written after that day's minute merge, so DAY coverage is exactly
     // the set of fully-cascaded days.)
-    val doneDays =
-      if (!CandleStore.hasData(spark, candleStorePath))
-        eventDays.filter(lit(false)).select(col("d"))
-      else CandleStore.read(spark, candleStorePath)
-        .filter(col("timeframe") === CandleTimeFrame.Day)
-        .select(col("window_date").as("d")).distinct()
-    // the day lists are metadata-scale; collecting them to drive the
+    val doneDays = CandleStore.windowDates(spark, candleStorePath, CandleTimeFrame.Day)
+    // the event day list is metadata-scale; collecting it to drive the
     // pruned scan is the intended driver-side step (not a data collect)
-    val missing = eventDays.join(doneDays, Seq("d"), "left_anti")
-      .collect().map(_.getAs[java.sql.Date]("d").toString).toSeq
+    val missing = EventStore.dates(spark, eventStorePath).collect()
+      .map(_.getAs[java.sql.Date]("event_date").toString).filterNot(doneDays).toSeq
     val days = (missing ++ force).distinct.sorted
     if (days.nonEmpty) {
       val txns = EventStore.read(spark, eventStorePath)

@@ -1,9 +1,12 @@
 package graft.operators
 
+import java.time.LocalDate
+
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DateType, StructType}
 
 import graft.model.Candle
 
@@ -31,6 +34,14 @@ import graft.model.Candle
   * that does not exist reads as an empty frame. Both layouts resolve
   * this way: `(timeframe, symbol)` from [[write]] and `(timeframe,
   * symbol, window_date)` from `CandleStream.cascadeMerge`.
+  *
+  * The incremental write path reads the same way, one level deeper:
+  * `CandleStream.mergeBatchIntoStore` opens only the `(timeframe,
+  * symbol, window_date)` partitions its batch touches
+  * ([[readPartitions]]), and `CandleStream.cascadeMerge` rolls each
+  * touched month up from that month's stored DAY partitions
+  * ([[readDates]]), not from its minutes. `CandleBackfill` judges a
+  * day done from the DAY directory listing alone ([[windowDates]]).
   */
 object CandleStore {
 
@@ -56,22 +67,19 @@ object CandleStore {
 
   private val candleSchema = Encoders.product[Candle].schema
 
-  /** True when `path` exists and holds at least one `timeframe=`
-    * partition directory. The check goes through the Hadoop FileSystem
-    * API so HDFS/S3 store paths behave like local ones (a java.io.File
-    * check would report "empty" there, and a merge would then
-    * overwrite partitions without their unchanged rows).
-    */
-  private[graft] def hasData(spark: SparkSession, path: String): Boolean = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(root) && timeframeDirs(fs, root).nonEmpty
-  }
+  /** [[candleSchema]] plus the `window_date` partition column. */
+  private val partitionedSchema = candleSchema.add("window_date", DateType)
 
   /** The `timeframe=…` partition directories directly under `root`. */
   private def timeframeDirs(fs: FileSystem, root: Path): Seq[Path] =
     fs.listStatus(root).toSeq.map(_.getPath)
       .filter(_.getName.startsWith("timeframe="))
+
+  /** `parent/column=value`, the value escaped exactly as Spark's
+    * partitioned writer escapes it (`A:B` → `symbol=A%3AB`).
+    */
+  private def partitionDir(parent: Path, column: String, value: String): Path =
+    new Path(parent, ExternalCatalogUtils.getPartitionPathString(column, value))
 
   /** The store restricted to the `timeframe=…/symbol=…` directories
     * that `tf` and `symbol` name (an absent filter spans every stored
@@ -84,18 +92,76 @@ object CandleStore {
                          tf: Option[String], symbol: Option[String]): DataFrame = {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def dir(parent: Path, column: String, value: String) =
-      new Path(parent, ExternalCatalogUtils.getPartitionPathString(column, value))
     val tfDirs = tf match {
-      case Some(t) => Seq(dir(root, "timeframe", t))
+      case Some(t) => Seq(partitionDir(root, "timeframe", t))
       case None => timeframeDirs(fs, root)
     }
-    val dirs = symbol.fold(tfDirs)(s => tfDirs.map(dir(_, "symbol", s)))
-      .filter(fs.exists)
-    if (dirs.isEmpty)
-      spark.createDataFrame(java.util.Collections.emptyList[Row](), candleSchema)
-    else spark.read.schema(candleSchema).option("basePath", path)
-      .parquet(dirs.map(_.toString): _*)
+    readDirs(spark, path, fs,
+      symbol.fold(tfDirs)(s => tfDirs.map(partitionDir(_, "symbol", s))), candleSchema)
+  }
+
+  /** The `(timeframe, symbol, window_date)` partitions named by `keys`
+    * — [[readScoped]] one level deeper, with `window_date` (a
+    * `yyyy-MM-dd` string, as the writer formats a date partition) as
+    * the third level. Read with the model schema plus `window_date`;
+    * absent partitions are skipped. A merge reads its partitions
+    * this way: it lists and opens just these directories, never the
+    * whole store.
+    */
+  private[graft] def readPartitions(spark: SparkSession, path: String,
+                                    keys: Seq[(String, String, String)]): DataFrame = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    readDirs(spark, path, fs, keys.map { case (tf, symbol, date) =>
+      partitionDir(partitionDir(partitionDir(root, "timeframe", tf), "symbol", symbol),
+        "window_date", date)
+    }, partitionedSchema)
+  }
+
+  /** The stored `tf` candles of each symbol in `dates` whose
+    * window_date is one of the dates listed for it, read with the
+    * model schema plus `window_date`. Each symbol's `tf` directory is
+    * read once, and a partition filter keeps the listed dates: a span
+    * of dates (a month's days) then costs one path per symbol, where a
+    * path per date would soon pass Spark's parallel-listing threshold
+    * and run a listing job. Absent symbols and dates are skipped.
+    */
+  private[graft] def readDates(spark: SparkSession, path: String, tf: String,
+                               dates: Map[String, Set[LocalDate]]): DataFrame = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tfDir = partitionDir(root, "timeframe", tf)
+    readDirs(spark, path, fs, dates.keys.toSeq.map(partitionDir(tfDir, "symbol", _)),
+      partitionedSchema)
+      .filter(dates.foldLeft(lit(false)) { case (keep, (symbol, ds)) =>
+        keep || (col("symbol") === symbol && col("window_date").isin(ds.toSeq: _*))
+      })
+  }
+
+  /** The existing ones of `dirs` (partition directories under the store
+    * at `path`) read with `schema`, or an empty frame when none exists.
+    */
+  private def readDirs(spark: SparkSession, path: String, fs: FileSystem,
+                       dirs: Seq[Path], schema: StructType): DataFrame = {
+    val present = dirs.distinct.filter(fs.exists)
+    if (present.isEmpty)
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    else spark.read.schema(schema).option("basePath", path)
+      .parquet(present.map(_.toString): _*)
+  }
+
+  /** The `window_date` values stored under timeframe `tf`, for any
+    * symbol, from a glob over the `window_date=` directories under
+    * `timeframe=tf` through the Hadoop FileSystem: no Spark job, and
+    * no data file is opened. Empty when the store does not exist.
+    */
+  private[graft] def windowDates(spark: SparkSession, path: String, tf: String): Set[String] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val prefix = "window_date="
+    Option(fs.globStatus(new Path(partitionDir(root, "timeframe", tf), s"symbol=*/$prefix*")))
+      .toSeq.flatten.filter(_.isDirectory).map(_.getPath.getName)
+      .map(n => ExternalCatalogUtils.unescapePathName(n.stripPrefix(prefix))).toSet
   }
 
   /** Range query against the store: reads the one (timeframe, symbol)

@@ -82,21 +82,38 @@ object Candles {
     // concurrently-scheduled branch aggregations and
     // InMemoryTableScan broke their codegen). Instead each minute
     // candle EXPLODES to its four (timeframe, parent_start) keys and
-    // ONE rollup aggregate computes every grain: one transaction
-    // scan, one minute exchange, one 4×-minute-rows exchange — no
-    // cache, no re-scan. The minute grain rides the same aggregate
-    // as a singleton group (min_by(open, window_start) over one row
-    // = open, sums are identity), so all four branches keep
-    // rollup()'s exact semantics. At 100 TB this is four passes over
-    // the raw transactions replaced by one.
-    val tfKey = explode(array(
-      struct(lit(CandleTimeFrame.Minute).as("tf"), col("window_start").as("ps")) +:
-        Seq(CandleTimeFrame.Hour, CandleTimeFrame.Day, CandleTimeFrame.Month).map(tf =>
-          struct(lit(tf).as("tf"),
-            date_trunc(CandleTimeFrame.truncUnit(tf), col("window_start")).as("ps"))): _*))
-    candleOhlcv(minuteCandles(txns)
-      .select(col("symbol"), col("window_start"), col("open"), col("high"),
-        col("low"), col("close"), col("volume"), col("n_txn"), tfKey.as("k"))
+    // ONE rollup aggregate computes every grain (see [[rollupEach]]):
+    // one transaction scan, one minute exchange, one 4×-minute-rows
+    // exchange — no cache, no re-scan. At 100 TB this is four passes
+    // over the raw transactions replaced by one.
+    rollupEach(Seq(minuteCandles(txns) -> CandleTimeFrame.all))
+  }
+
+  /** [[rollup]] to several timeframes in ONE aggregate: every child
+    * candle of each frame joins the group of each timeframe listed with
+    * that frame, keyed by its calendar-truncated window start, and one
+    * aggregate over all (symbol, timeframe, window start) groups
+    * computes every grain. A MINUTE listed for minute children is the
+    * singleton group (min_by(open, window_start) over one row = open,
+    * sums are identity), so each grain keeps rollup()'s exact
+    * semantics. Children of different grains may share a group only
+    * when their time spans are disjoint (e.g. a month's DAY candles for
+    * some days and MINUTE candles for the others): open/close then
+    * still come from the earliest/latest child, so the result is the
+    * same as rolling up from any one grain.
+    */
+  private[graft] def rollupEach(children: Seq[(DataFrame, Seq[String])]): DataFrame = {
+    def parentKeys(tfs: Seq[String]): Column = explode(array(tfs.map { tf =>
+      val start = if (tf == CandleTimeFrame.Minute) col("window_start")
+        else date_trunc(CandleTimeFrame.truncUnit(tf), col("window_start"))
+      struct(lit(tf).as("tf"), start.as("ps"))
+    }: _*))
+    candleOhlcv(children
+      .map { case (df, tfs) =>
+        df.select(col("symbol"), col("window_start"), col("open"), col("high"),
+          col("low"), col("close"), col("volume"), col("n_txn"), parentKeys(tfs).as("k"))
+      }
+      .reduce(_ unionByName _)
       .groupBy(col("symbol"), col("k.tf").as("timeframe"), col("k.ps").as("parent_start")))
       .withColumnRenamed("parent_start", "window_start")
       .withColumn("window_end", windowEndDynamic)
@@ -244,7 +261,7 @@ object Candles {
     * aggregateCandles (kt:318-339): open of the earliest child, close
     * of the latest, high/low = max/min, volume and n_txn summed. The
     * one aggregate list of [[rollup]], [[rollupInterval]] and
-    * [[multiTimeframe]].
+    * [[rollupEach]].
     */
   private def candleOhlcv(children: RelationalGroupedDataset): DataFrame =
     children.agg(

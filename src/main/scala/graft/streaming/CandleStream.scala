@@ -1,5 +1,7 @@
 package graft.streaming
 
+import java.time.LocalDate
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -183,53 +185,66 @@ object CandleStream {
       .start()
 
   /** Merge one candle batch into the partitioned store: rewrite
-    * exactly the affected (timeframe, symbol, window_date) partitions
-    * via dynamic partition overwrite, carrying their unchanged rows.
-    * The existence check is [[CandleStore.hasData]].
+    * exactly the (timeframe, symbol, window_date) partitions the batch
+    * touches via dynamic partition overwrite, carrying their unchanged
+    * rows. The batch is computed once (persisted here, so a caller
+    * need not persist it), its few partition keys are collected, and
+    * only those partition directories are read back
+    * ([[CandleStore.readPartitions]]); stored rows the batch supersedes
+    * (same timeframe, symbol and window_start) are dropped. The store
+    * at `path` need not exist yet. The batch must have the candle
+    * columns of [[Candles.candleColumns]].
     */
-  def mergeBatchIntoStore(rawBatch: DataFrame, path: String): Unit = {
+  def mergeBatchIntoStore(rawBatch: DataFrame, path: String): Unit =
+    mergePartitions(rawBatch, path)((_, _) => ())
+
+  /** [[mergeBatchIntoStore]], then `andThen` on the rewritten
+    * partitions: the merged rows (persisted until `andThen` returns)
+    * and their (timeframe, symbol, window_date) keys.
+    */
+  private def mergePartitions(rawBatch: DataFrame, path: String)
+      (andThen: (DataFrame, Seq[(String, String, String)]) => Unit): Unit = {
     val spark = rawBatch.sparkSession
-    val batch = rawBatch.withColumn("window_date", to_date(col("window_start")))
     val partCols = Seq("timeframe", "symbol", "window_date")
     val keyCols = Seq("timeframe", "symbol", "window_start")
-    // merge-on-write: rewritten partitions must carry their unchanged
-    // rows too, so read them back (partition-pruned via the semi-join
-    // on the tiny affected-partition key set), drop rows superseded by
-    // this batch, and union the new versions
-    val merged = if (!CandleStore.hasData(spark, path)) batch else {
-      val affected = batch.select(partCols.map(col): _*).distinct()
-      val existing = spark.read.parquet(path)
-        .join(broadcast(affected), partCols, "left_semi")
+    val batch = rawBatch.withColumn("window_date", to_date(col("window_start"))).persist()
+    try {
+      // the string cast formats a date the way the partitioned writer
+      // names its directory, so the directories read are those written
+      val keys = batch.select(partCols.map(col(_).cast("string")): _*).distinct().collect()
+        .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq
+      val merged = CandleStore.readPartitions(spark, path, keys)
         .join(broadcast(batch.select(keyCols.map(col): _*)), keyCols, "left_anti")
-      existing.unionByName(batch)
-    }
-    // materialize before writing: the write target is also the read
-    // source, which Spark (rightly) refuses without a barrier
-    merged.persist()
-    merged.count()
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try merged.write.mode("overwrite")
-      .partitionBy(partCols: _*)
-      .parquet(path)
-    finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
-      }
-      merged.unpersist()
-    }
+        .unionByName(batch)
+        // one task writes each partition, so it is one file
+        .repartition(partCols.map(col): _*)
+        .persist()
+      try {
+        // materialize before writing: the write target is also the read
+        // source, which Spark (rightly) refuses without a barrier
+        merged.count()
+        val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        try merged.write.mode("overwrite")
+          .partitionBy(partCols: _*)
+          .parquet(path)
+        finally prev match {
+          case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
+          case None => spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
+        }
+        andThen(merged, keys)
+      } finally merged.unpersist()
+    } finally batch.unpersist()
   }
 
   /** The reference's full cascade as an incremental streaming
     * materialization (reference: CandlestickAggregator.kt:119-186 —
     * the minute candle stream is re-windowed into HOUR/DAY/MONTH):
-    * each micro-batch upserts its minute candles, then re-derives the
-    * hour/day/month candles of every affected (symbol, month) from
-    * the minute partitions of the store and upserts those too. The
-    * store always holds a consistent view of all four timeframes; the
-    * rollups re-aggregate only the (tiny) minute-candle table scoped
-    * to the touched months, never the raw transactions.
+    * each micro-batch runs [[cascadeMerge]], which rewrites only the
+    * (timeframe, symbol, window_date) partitions the batch touches.
+    * The store always holds a consistent view of all four timeframes,
+    * and the work per batch follows the days it touches, not the
+    * history stored.
     */
   def cascadeToStore(minuteCandles: DataFrame, path: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
@@ -242,33 +257,45 @@ object CandleStream {
       .start()
 
   /** One cascade step, shared by the streaming sink and the batch
-    * backfill: merge a minute-candle batch, then re-derive and merge
-    * the hour/day/month candles of every affected (symbol, month)
-    * from the store's minute partitions. Months are the widest
-    * rollup, so re-rolling whole months keeps every timeframe exact.
+    * backfill, as two merges ([[mergeBatchIntoStore]]):
+    *  1. the minute batch is merged; the merged minute partitions are
+    *     kept (persisted) — each is one (symbol, date), whole;
+    *  1. one aggregate ([[Candles.rollupEach]]) rolls the HOUR and DAY
+    *     candles of those dates up from them, and the MONTH candle of
+    *     each touched (symbol, month) from the month's stored DAY
+    *     candles, with each touched day's minutes in place of its
+    *     stale DAY candle; the three timeframes are merged in one
+    *     write.
+    *
+    * DAY is thus written after MINUTE, which `CandleBackfill` relies
+    * on. The month roll-up is exact: the OHLCV aggregate is min/max,
+    * min_by/max_by on window_start and long sums over children with
+    * disjoint time spans, so it equals the minute→month rollup bit for
+    * bit.
+    *
+    * Preconditions: a stored MINUTE partition holds every minute
+    * candle of its (symbol, date) — true of any store written only by
+    * these merges, which carry a partition's unchanged rows — and the
+    * stored DAY candles of every other day of a touched month are
+    * current, since MONTH is rolled from them. A cascade interrupted
+    * between its two merges leaves its days without a current DAY
+    * candle; re-running it (a streaming retry of the batch, or
+    * `CandleBackfill`, which re-processes days that lack one) restores
+    * both.
     */
-  def cascadeMerge(minuteBatch: DataFrame, path: String): Unit = {
-    val spark = minuteBatch.sparkSession
-    minuteBatch.persist()
-    try {
-      mergeBatchIntoStore(minuteBatch, path)
-      val months = minuteBatch
-        .select(col("symbol").as("m_symbol"),
-          date_trunc("month", col("window_start")).as("m_month"))
-        .distinct()
-      val minuteScope = spark.read.parquet(path)
-        .filter(col("timeframe") === CandleTimeFrame.Minute)
-        .join(broadcast(months),
-          col("symbol") === col("m_symbol") &&
-            date_trunc("month", col("window_start")) === col("m_month"),
-          "left_semi")
-        .select(Candles.candleColumns: _*)
-      val rolled = Seq(CandleTimeFrame.Hour, CandleTimeFrame.Day, CandleTimeFrame.Month)
-        .map(Candles.rollup(minuteScope, _))
-        .reduce(_ unionByName _)
-      mergeBatchIntoStore(rolled, path)
-    } finally minuteBatch.unpersist()
-  }
+  def cascadeMerge(minuteBatch: DataFrame, path: String): Unit =
+    mergePartitions(minuteBatch, path) { (minutes, keys) =>
+      val touched = keys.map { case (_, symbol, date) => (symbol, LocalDate.parse(date)) }.toSet
+      val otherDays = touched.flatMap { case (symbol, date) =>
+        val first = date.withDayOfMonth(1)
+        (0 until date.lengthOfMonth).map(i => (symbol, first.plusDays(i)))
+      } -- touched
+      val storedDays = CandleStore.readDates(minuteBatch.sparkSession, path,
+        CandleTimeFrame.Day, otherDays.groupMap(_._1)(_._2))
+      mergeBatchIntoStore(Candles.rollupEach(Seq(
+        minutes -> Seq(CandleTimeFrame.Hour, CandleTimeFrame.Day, CandleTimeFrame.Month),
+        storedDays -> Seq(CandleTimeFrame.Month))), path)
+    }
 
   /** Run a streaming candle pipeline over a bounded source to
     * completion and return the full result — used by verify/tests to

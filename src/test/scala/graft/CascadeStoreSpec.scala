@@ -3,10 +3,13 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.model.{CandleTimeFrame, StockTransaction}
+import graft.model.{Candle, CandleTimeFrame, StockTransaction}
 import graft.operators.Candles
 import graft.streaming.CandleStream
 
@@ -57,39 +60,111 @@ class CascadeStoreSpec extends SparkSpec {
       === Set("MINUTE", "HOUR", "DAY", "MONTH"))
   }
 
+  /** The store's candles, read with the model schema so a
+    * numeric-looking symbol directory (`symbol=0700`) stays a string.
+    */
+  private def readStore(dir: String): DataFrame =
+    spark.read.schema(Encoders.product[Candle].schema).parquet(dir)
+      .select(Candles.candleColumns: _*)
+
   test("mergeBatchIntoStore is idempotent: re-delivering a micro-batch leaves the store unchanged") {
     // Structured Streaming's foreachBatch re-runs a batch after a sink
     // failure; exactly-once for the candle store therefore reduces to
     // the upsert being a no-op on retry (same batchId, same rows).
-    val dir = Files.createTempDirectory("idem-store").toString
-    val txns1 = Seq(
-      StockTransaction("AAPL", 10.0, 5, ts("2024-03-01 09:30:05")),
-      StockTransaction("AAPL", 12.0, 3, ts("2024-03-01 09:30:40")),
-      StockTransaction("MSFT", 99.0, 2, ts("2024-03-01 10:10:00"))).toDF()
-    val txns2 = Seq(
-      StockTransaction("AAPL", 11.0, 1, ts("2024-03-01 09:30:50")), // refines 09:30
-      StockTransaction("MSFT", 98.0, 6, ts("2024-03-01 11:00:00"))).toDF()
+    // The second symbol's partition carries an unchanged row through
+    // the refining merge, so it also runs on symbols whose partition
+    // directory the writer escapes (`A:B`), names with a space, and a
+    // numeric-looking one: a read of a wrongly escaped or typed
+    // directory would miss that row and the overwrite would drop it.
+    Seq("MSFT", "A:B", "A B", "0700").foreach { sym =>
+      val dir = Files.createTempDirectory("idem-store").toString
+      val txns1 = Seq(
+        StockTransaction("AAPL", 10.0, 5, ts("2024-03-01 09:30:05")),
+        StockTransaction("AAPL", 12.0, 3, ts("2024-03-01 09:30:40")),
+        StockTransaction(sym, 99.0, 2, ts("2024-03-01 10:10:00"))).toDF()
+      val txns2 = Seq(
+        StockTransaction("AAPL", 11.0, 1, ts("2024-03-01 09:30:50")), // refines 09:30
+        StockTransaction(sym, 98.0, 6, ts("2024-03-01 11:00:00"))).toDF()
 
-    def snapshot(): Set[Seq[Any]] =
-      spark.read.parquet(dir).select(Candles.candleColumns: _*)
-        .collect().map(_.toSeq).toSet
+      def snapshot(): Set[Seq[Any]] = readStore(dir).collect().map(_.toSeq).toSet
 
-    CandleStream.mergeBatchIntoStore(Candles.minuteCandles(txns1), dir)
-    val afterFirst = snapshot()
-    // retry of batch 1 against a non-empty store
-    CandleStream.mergeBatchIntoStore(Candles.minuteCandles(txns1), dir)
-    assert(snapshot() === afterFirst)
+      CandleStream.mergeBatchIntoStore(Candles.minuteCandles(txns1), dir)
+      val afterFirst = snapshot()
+      // retry of batch 1 against a non-empty store
+      CandleStream.mergeBatchIntoStore(Candles.minuteCandles(txns1), dir)
+      assert(snapshot() === afterFirst, sym)
 
-    // a refining batch, applied twice, also converges to one apply
-    val refined = Candles.minuteCandles(txns1.unionByName(txns2))
-      .join(Candles.minuteCandles(txns2).select("symbol", "window_start"),
-        Seq("symbol", "window_start"), "left_semi")
-    CandleStream.mergeBatchIntoStore(refined, dir)
-    val afterSecond = snapshot()
-    CandleStream.mergeBatchIntoStore(refined, dir)
-    assert(snapshot() === afterSecond)
-    assert(afterSecond === Candles.minuteCandles(txns1.unionByName(txns2))
-      .collect().map(_.toSeq).toSet)
+      // a refining batch, applied twice, also converges to one apply
+      val refined = Candles.minuteCandles(txns1.unionByName(txns2))
+        .join(Candles.minuteCandles(txns2).select("symbol", "window_start"),
+          Seq("symbol", "window_start"), "left_semi")
+      CandleStream.mergeBatchIntoStore(refined, dir)
+      val afterSecond = snapshot()
+      CandleStream.mergeBatchIntoStore(refined, dir)
+      assert(snapshot() === afterSecond, sym)
+      assert(afterSecond === Candles.minuteCandles(txns1.unionByName(txns2))
+        .collect().map(_.toSeq).toSet, sym)
+    }
+  }
+
+  test("incremental cascade equals the batch aggregation and leaves untouched days alone") {
+    val dir = Files.createTempDirectory("incr-cascade").toString
+    val seen = scala.collection.mutable.ArrayBuffer.empty[StockTransaction]
+
+    // one cascade step as a streaming update delivers it: the full
+    // candle of every minute the new trades touch; afterwards the
+    // store must equal the batch aggregation over every trade so far
+    def cascade(fresh: Seq[StockTransaction]): Unit = {
+      seen ++= fresh
+      val all = seen.toSeq.toDF()
+      val touched = Candles.minuteCandles(fresh.toDF()).select("symbol", "window_start")
+      CandleStream.cascadeMerge(Candles.minuteCandles(all)
+        .join(touched, Seq("symbol", "window_start"), "left_semi"), dir)
+      val want = Candles.multiTimeframe(all).select(Candles.candleColumns: _*)
+      val got = readStore(dir)
+      assert(got.count() === want.count())
+      assert(got.collect().toSet === want.collect().toSet)
+    }
+
+    // the data files of the HOUR and DAY partitions of `dates`
+    def rollupFiles(dates: Seq[String]): Set[String] = {
+      val root = java.nio.file.Paths.get(dir)
+      val walk = Files.walk(root)
+      try walk.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(root.relativize(_).toString)
+        .filter(f => f.endsWith(".parquet") &&
+          Seq(CandleTimeFrame.Hour, CandleTimeFrame.Day).exists(tf => f.startsWith(s"timeframe=$tf/")) &&
+          dates.exists(d => f.contains(s"/window_date=$d/")))
+        .toSet
+      finally walk.close()
+    }
+
+    // three days of one month, two symbols (one the writer escapes)
+    cascade(Seq("AAPL", "A:B").zipWithIndex.flatMap { case (s, i) =>
+      (1 to 3).flatMap { d =>
+        Seq(StockTransaction(s, 10.0 + i + d, d, ts(s"2024-01-0$d 09:30:05")),
+          StockTransaction(s, 11.0 + i + d, d + 1, ts(s"2024-01-0$d 09:30:40")),
+          StockTransaction(s, 9.0 + i + d, d + 2, ts(s"2024-01-0$d 14:10:00")))
+      }
+    })
+    val day12 = Seq("2024-01-01", "2024-01-02")
+    val before = rollupFiles(day12)
+    assert(before.size >= 8) // HOUR and DAY, two symbols, two days
+
+    // a batch on day 3: a new minute and a refined one
+    cascade(Seq(
+      StockTransaction("AAPL", 20.0, 4, ts("2024-01-03 15:00:00")),
+      StockTransaction("A:B", 8.5, 2, ts("2024-01-03 09:30:50"))))
+    assert(rollupFiles(day12) === before)
+
+    // a late restatement of day 1: a new low inside a stored minute
+    cascade(Seq(StockTransaction("AAPL", 1.0, 9, ts("2024-01-01 09:30:30"))))
+
+    // a batch straddling a month end
+    cascade(Seq(
+      StockTransaction("AAPL", 30.0, 1, ts("2024-01-31 23:59:00")),
+      StockTransaction("AAPL", 31.0, 2, ts("2024-02-01 00:00:00")),
+      StockTransaction("A:B", 29.0, 3, ts("2024-01-31 23:59:00"))))
   }
 
   test("cascadeMerge is idempotent: re-delivering a minute batch leaves all timeframes unchanged") {
