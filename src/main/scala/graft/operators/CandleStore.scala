@@ -25,15 +25,18 @@ import graft.model.Candle
   * swap `symbol` for `pmod(xxhash64(symbol), nBuckets)` — the read
   * path below would then prune on the bucket column.
   *
-  * [[range]], [[point]], [[recent]] and [[candleKeys]] never resolve
-  * the whole store: they read only the directories their timeframe
-  * and/or symbol name, with the schema of [[graft.model.Candle]]
-  * instead of one inferred from parquet footers. That skips both the
-  * full-store listing and the footer-inference job, and keeps a
-  * numeric-looking symbol such as `0700` a string. A named directory
-  * that does not exist reads as an empty frame. Both layouts resolve
-  * this way: `(timeframe, symbol)` from [[write]] and `(timeframe,
-  * symbol, window_date)` from `CandleStream.cascadeMerge`.
+  * [[range]], [[point]], [[recent]] and [[candleKeys]] — the batch
+  * `q_store_*` queries — never resolve the whole store: they read only
+  * the directories their timeframe and/or symbol name, with the schema
+  * of [[graft.model.Candle]] instead of one inferred from parquet
+  * footers. That skips both the full-store listing and the
+  * footer-inference job, and keeps a numeric-looking symbol such as
+  * `0700` a string. A named directory that does not exist reads as an
+  * empty frame. Both layouts resolve this way: `(timeframe, symbol)`
+  * from [[write]] and `(timeframe, symbol, window_date)` from
+  * `CandleStream.cascadeMerge`. The HTTP gateway answers the same
+  * queries without a Spark job, reading the same directories on the
+  * driver (`graft.serving.LocalStore`).
   *
   * The incremental write path reads the same way, one level deeper:
   * `CandleStream.mergeBatchIntoStore` opens only the `(timeframe,
@@ -65,7 +68,8 @@ object CandleStore {
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 
-  private val candleSchema = Encoders.product[Candle].schema
+  /** The schema of [[graft.model.Candle]]: the store's columns. */
+  private[graft] val candleSchema: StructType = Encoders.product[Candle].schema
 
   /** [[candleSchema]] plus the `window_date` partition column. */
   private val partitionedSchema = candleSchema.add("window_date", DateType)
@@ -78,7 +82,7 @@ object CandleStore {
   /** `parent/column=value`, the value escaped exactly as Spark's
     * partitioned writer escapes it (`A:B` → `symbol=A%3AB`).
     */
-  private def partitionDir(parent: Path, column: String, value: String): Path =
+  private[graft] def partitionDir(parent: Path, column: String, value: String): Path =
     new Path(parent, ExternalCatalogUtils.getPartitionPathString(column, value))
 
   /** The store restricted to the `timeframe=…/symbol=…` directories

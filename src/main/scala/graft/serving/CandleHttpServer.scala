@@ -7,6 +7,10 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import com.sun.net.httpserver.{HttpContext, HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.graft.{DriverReads, JsonRows}
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.model.CandleTimeFrame
 import graft.operators.{CandleStore, Candles}
@@ -31,19 +35,23 @@ import graft.operators.{CandleStore, Candles}
   *     CandleStickService.kt:176-196; truncated pages carry an
   *     X-Next-Key cursor reusable verbatim as the next `after`)
   *
-  * Serving is driver-side by design: each request reads only the
-  * store directories its timeframe and symbol name, plus row-group
-  * pruning, so the collect returns a chart's worth of rows, not a
-  * scan. A production deployment would put a connection-pooled
-  * gateway in front of a long-lived SparkSession exactly like this.
+  * Every route reads the store on the driver ([[LocalStore]]): it
+  * lists the `timeframe=…/symbol=…` directories it names and decodes
+  * their Parquet files with Spark's own reader, built once per
+  * gateway, and renders rows with the generator `Dataset.toJSON`
+  * uses. No Spark job runs, and a body is byte for byte the `toJSON`
+  * of the matching `CandleQueries` query. `/symbols` reads directory
+  * names only. The one exception is `fill=true`: its range rows, read
+  * the same way, are gap-filled by a Spark query over a local
+  * relation. A `from`/`to` that is not a timestamp is a 400.
   *
   * Requests run concurrently on a fixed pool of
-  * `spark.sparkContext.defaultParallelism` worker threads, one Spark
-  * job stream per worker. Every worker shares the one `SparkSession`
-  * passed to [[start]]; the handler only builds new DataFrames from
-  * it and never mutates its conf or catalog, so concurrent requests
-  * need no further locking. Stopping the returned server also shuts
-  * the pool down and waits for its threads to end.
+  * `spark.sparkContext.defaultParallelism` worker threads. Every
+  * worker shares the one `SparkSession` passed to [[start]]; the
+  * handler reads its conf once, at [[start]], and never mutates its
+  * conf or catalog, so concurrent requests need no further locking.
+  * Stopping the returned server also shuts the pool down and waits for
+  * its threads to end.
   */
 object CandleHttpServer {
 
@@ -61,10 +69,24 @@ object CandleHttpServer {
   private[serving] def nextCursor(rowJson: String): Option[String] =
     windowStartRe.findFirstMatchIn(rowJson).map(_.group(1))
 
+  /** The JDK property that turns on TCP_NODELAY for `HttpServer`
+    * connections. The JDK sends a response's headers in a segment of
+    * their own; with Nagle's algorithm on, the small body segment after
+    * them then waits for the client's delayed ACK, ~40 ms a request.
+    */
+  private val NoDelayProperty = "sun.net.httpserver.nodelay"
+
+  /** Starts a gateway over the store at `storePath`. Unless the JVM
+    * already has [[NoDelayProperty]] set, this sets it to `true`. The
+    * JDK reads it once per JVM, when the first `HttpServer` is created,
+    * so it takes effect only if no `HttpServer` ran in this JVM before.
+    */
   def start(spark: SparkSession, storePath: String, port: Int = 0): HttpServer = {
+    if (System.getProperty(NoDelayProperty) == null) System.setProperty(NoDelayProperty, "true")
+    val handler = new Handler(spark, new LocalStore(spark, storePath))
     val server = new PooledServer(HttpServer.create(new InetSocketAddress(port), 0),
       spark.sparkContext.defaultParallelism)
-    server.createContext("/", new Handler(spark, storePath))
+    server.createContext("/", handler)
     server.start()
     server
   }
@@ -101,8 +123,11 @@ object CandleHttpServer {
     override def getAddress: InetSocketAddress = server.getAddress
   }
 
-  private final class Handler(spark: SparkSession, storePath: String)
+  private final class Handler(spark: SparkSession, store: LocalStore)
       extends HttpHandler {
+
+    private val candleJson = new JsonRows(spark, CandleStore.candleSchema)
+    private val symbolJson = new JsonRows(spark, StructType(Seq(CandleStore.candleSchema("symbol"))))
 
     override def handle(ex: HttpExchange): Unit =
       try {
@@ -115,30 +140,34 @@ object CandleHttpServer {
           }.toMap
         path.split("/").toList match {
           case "symbols" :: Nil =>
-            respond(ex, 200, toJsonArray(
-              CandleStore.keys(spark, storePath).select("symbol").distinct()))
+            respond(ex, 200, store.symbols
+              .map(s => symbolJson(InternalRow(UTF8String.fromString(s))))
+              .mkString("[", ",", "]"))
           case "candles" :: symbol :: tf :: Nil =>
             requireTf(tf)
             val limit = params.getOrElse("limit", MaxRangeRows.toString).toInt
             require(limit > 0 && limit <= MaxRangeRows,
               s"limit must be in 1..$MaxRangeRows")
-            val ranged = CandleStore.range(spark, storePath, symbol, tf,
-              params.getOrElse("from", "1970-01-01 00:00:00"),
-              params.getOrElse("to", "9999-01-01 00:00:00"))
+            // fetch limit+1: the extra row both signals truncation and
+            // carries the next page's inclusive `from` cursor, so the
+            // gateway heap is bounded no matter how wide the range is
+            val rows = store.range(symbol, tf,
+              timestamp(params, "from", "1970-01-01 00:00:00"),
+              timestamp(params, "to", "9999-01-01 00:00:00"), limit + 1)
             // ?fill=true: continuous calendar series over the range —
             // the reference's range read emits one entry per calendar
             // slot (CandleStickService.kt:88-101
             // generateDateTimeSequence). Gap slots carry the previous
             // close forward (volume 0, is_gap true); the fill spans
             // first..last stored candle inside the requested range, so
-            // every emitted row has a defined close
-            val rows =
-              if (params.get("fill").contains("true")) filledRows(ranged, tf)
-              else candleRows(ranged)
-            // fetch limit+1: the extra row both signals truncation and
-            // carries the next page's inclusive `from` cursor, so the
-            // gateway heap is bounded no matter how wide the range is
-            val page = rows.limit(limit + 1).toJSON.collect()
+            // every emitted row has a defined close. Each stored candle
+            // fills at least one slot, so the first limit+1 stored
+            // candles determine the first limit+1 filled slots
+            val page =
+              if (params.get("fill").contains("true"))
+                filledRows(DriverReads.localFrame(spark, CandleStore.candleSchema, rows), tf)
+                  .limit(limit + 1).toJSON.collect().toSeq
+              else rows.map(candleJson(_))
             if (page.length > limit)
               nextCursor(page(limit)).foreach(
                 ex.getResponseHeaders.set("X-Next-From", _))
@@ -147,13 +176,10 @@ object CandleHttpServer {
           case "candles" :: symbol :: tf :: "recent" :: Nil =>
             requireTf(tf)
             val n = params.getOrElse("n", "25").toInt
-            // same gateway-heap bound as the range route's `limit`:
-            // recent materializes n rows per symbol before the filter
+            // same gateway-heap bound as the range route's `limit`
             require(n > 0 && n <= MaxRangeRows,
               s"n must be in 1..$MaxRangeRows")
-            respond(ex, 200, toJsonArray(candleRows(
-              CandleStore.recent(spark, storePath, tf, n)
-                .filter(org.apache.spark.sql.functions.col("symbol") === symbol))))
+            respond(ex, 200, toJsonArray(store.recent(symbol, tf, n)))
           case "keys" :: rest if rest.size <= 2 =>
             val (symbol, tf) = rest match {
               case Nil            => (None, None)
@@ -170,21 +196,17 @@ object CandleHttpServer {
             // keys are emitted in key order, so `after` resumes the
             // enumeration exactly where the last page stopped — same
             // cursor contract as the range route's X-Next-From. The
-            // extra fetched row ONLY signals truncation; the cursor is
-            // the LAST RETURNED key, page(limit-1), because the
-            // `key > after` filter is exclusive — advancing the cursor
-            // to the extra row itself would skip one key per page
-            val keys = CandleStore.candleKeys(spark, storePath, symbol, tf)
-            val page = params.get("after").fold(keys)(
-                a => keys.filter(org.apache.spark.sql.functions.col("key") > a))
-              .limit(limit + 1).collect().map(_.getString(0))
+            // extra fetched key ONLY signals truncation; the cursor is
+            // the LAST RETURNED key, page(limit-1), because `after` is
+            // exclusive — advancing the cursor to the extra key itself
+            // would skip one key per page
+            val page = store.keys(symbol, tf, params.get("after"), limit + 1)
             if (page.length > limit)
               ex.getResponseHeaders.set("X-Next-Key", page(limit - 1))
             respond(ex, 200, toJsonStringArray(page.take(limit)))
           case "candles" :: symbol :: tf :: "point" :: Nil =>
             requireTf(tf)
-            respond(ex, 200, toJsonArray(candleRows(
-              CandleStore.point(spark, storePath, symbol, tf, params("key")))))
+            respond(ex, 200, toJsonArray(store.point(symbol, tf, params("key"))))
           case _ =>
             respond(ex, 404, errorJson(s"no such route: /$path"))
         }
@@ -196,6 +218,16 @@ object CandleHttpServer {
         case e: Exception =>
           respond(ex, 500, errorJson(e.getClass.getSimpleName))
       } finally ex.close()
+
+    /** Query parameter `name` (or `default`) as epoch microseconds in
+      * the session time zone; a 400 naming the parameter when it is
+      * not a timestamp.
+      */
+    private def timestamp(params: Map[String, String], name: String, default: String): Long = {
+      val v = params.getOrElse(name, default)
+      DriverReads.parseTimestamp(v, store.zone).getOrElse(
+        throw new IllegalArgumentException(s"parameter $name is not a timestamp: $v"))
+    }
 
     /** Error payloads embed request-derived strings (e.g. the echoed
       * timeframe), so they must be JSON-escaped or a quote in the input
@@ -219,14 +251,11 @@ object CandleHttpServer {
       require(CandleTimeFrame.all.contains(tf),
         s"unknown timeframe $tf (expected one of ${CandleTimeFrame.all.mkString(",")})")
 
-    private def candleRows(df: DataFrame): DataFrame =
-      df.select(Candles.candleColumns: _*)
-
-    /** Gap-filled candle rows for the range route: same shape as
-      * candleRows plus `is_gap`; filled slots carry the previous close
-      * as OHLC (flat candle), volume 0, n_txn 0. Re-sorted by
-      * window_start — the gap-fill join does not preserve the range
-      * read's order, and the X-Next-From cursor contract requires it.
+    /** Gap-filled candle rows for the range route: the candle columns
+      * plus `is_gap`; filled slots carry the previous close as OHLC
+      * (flat candle), volume 0, n_txn 0. Re-sorted by window_start —
+      * the gap-fill join does not preserve the range read's order, and
+      * the X-Next-From cursor contract requires it.
       */
     private def filledRows(df: DataFrame, tf: String): DataFrame = {
       import org.apache.spark.sql.functions._
@@ -244,8 +273,8 @@ object CandleHttpServer {
         .orderBy(col("window_start"))
     }
 
-    private def toJsonArray(df: DataFrame): String =
-      df.toJSON.collect().mkString("[", ",", "]")
+    private def toJsonArray(rows: Seq[InternalRow]): String =
+      rows.map(candleJson(_)).mkString("[", ",", "]")
 
     /** Strings → JSON array of strings. Keys are
       * `candle:SYM:TF:digits` — nothing to escape in practice, but

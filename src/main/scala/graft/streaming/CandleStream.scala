@@ -223,15 +223,11 @@ object CandleStream {
         // materialize before writing: the write target is also the read
         // source, which Spark (rightly) refuses without a barrier
         merged.count()
-        val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try merged.write.mode("overwrite")
+        // a writer option, not the session conf: the session is shared
+        merged.write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
           .partitionBy(partCols: _*)
           .parquet(path)
-        finally prev match {
-          case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-          case None => spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
-        }
         andThen(merged, keys)
       } finally merged.unpersist()
     } finally batch.unpersist()

@@ -182,4 +182,28 @@ class CascadeStoreSpec extends SparkSpec {
       .collect().map(_.toSeq).toSet
     assert(twice === once)
   }
+
+  test("merges leave the session's partitionOverwriteMode as they found it, set or unset") {
+    // the merges overwrite partitions dynamically through a writer
+    // option; the session is shared (the gateway reads through it), so
+    // they must not set or reset its conf
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    def setting: Option[String] = spark.conf.getAll.get(key)
+    val original = setting
+    try for (preset <- Seq(None, Some("static"))) {
+      preset.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      val dir = Files.createTempDirectory("conf-cascade").toString
+      val day = Seq(
+        StockTransaction("AAPL", 10.0, 5, ts("2024-03-01 09:30:05")),
+        StockTransaction("AAPL", 12.0, 3, ts("2024-03-02 10:15:00"))).toDF()
+      CandleStream.mergeBatchIntoStore(Candles.minuteCandles(day), dir)
+      assert(setting === preset, "after mergeBatchIntoStore")
+      val next = Seq(StockTransaction("AAPL", 11.0, 1, ts("2024-03-02 10:15:30"))).toDF()
+      CandleStream.cascadeMerge(Candles.minuteCandles(next), dir)
+      assert(setting === preset, "after cascadeMerge")
+      // still a dynamic overwrite: the untouched day 1 minute survives
+      assert(readStore(dir).filter(col("timeframe") === CandleTimeFrame.Minute).count() === 2,
+        s"preset $preset")
+    } finally original.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }

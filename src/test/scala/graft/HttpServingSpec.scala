@@ -1,22 +1,23 @@
 package graft
 
 import java.net.{HttpURLConnection, URI}
-import java.nio.file.Files
+import java.nio.file.{Files, Path => JPath}
 import java.sql.Timestamp
-import java.util.concurrent.Executors
+import java.util.concurrent.{ConcurrentLinkedQueue, Executors}
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 import scala.io.Source
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 import graft.model.{CandleTimeFrame, StockTransaction}
 import graft.operators.{CandleQueries, Candles, CandleStore}
 import graft.serving.CandleHttpServer
-import graft.streaming.TransactionSimulator
+import graft.streaming.{CandleStream, TransactionSimulator}
 
 /** The reference's serving layer end-to-end: HTTP requests against a
   * store-backed gateway return the same candles the query operators
@@ -386,5 +387,155 @@ class HttpServingSpec extends SparkSpec {
       server.stop(0)
     }
     assert(gatewayThreads(port).isEmpty, "gateway worker threads outlived stop")
+  }
+
+  test("a from or to that is not a timestamp is a 400 naming it, with or without fill") {
+    val dir = Files.createTempDirectory("http-bad-ts-store").toString
+    CandleStore.write(Candles.multiTimeframe(TransactionSimulator.batch(spark, 300)), dir)
+    val server = CandleHttpServer.start(spark, dir)
+    val port = server.getAddress.getPort
+    try {
+      for ((name, query) <- Seq(
+          "from" -> "from=garbage",
+          "to" -> "from=2024-01-01 00:00:00&to=garbage",
+          "from" -> "from=2024-13-45 00:00:00",
+          "from" -> "from=garbage&fill=true",
+          "to" -> "to=garbage&fill=true")) {
+        val (code, body) = fetch(port, "/candles/AAPL/DAY", query)
+        assert(code === 400, query)
+        val err = spark.read.json(Seq(body).toDS().as[String]).select("error").as[String].head()
+        assert(err.startsWith(s"parameter $name "), s"$query: $body")
+      }
+    } finally server.stop(0)
+  }
+
+  /** Number of Spark jobs that start while `body` runs. A sentinel
+    * job, started after `body` from this thread, is awaited so that
+    * every earlier job start has reached the listener.
+    */
+  private def jobsDuring(body: => Unit): Int = {
+    val groups = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    val sentinel = "job-count-sentinel"
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      spark.sparkContext.setJobGroup(sentinel, sentinel)
+      try spark.range(1).count() finally spark.sparkContext.clearJobGroup()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!groups.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(groups.contains(sentinel), "the sentinel job never reached the listener")
+      groups.asScala.count(_ != sentinel)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("range, point, recent, keys and /symbols start no Spark job; fill=true still answers") {
+    val dir = Files.createTempDirectory("http-no-job-store").toString
+    CandleStore.write(Candles.multiTimeframe(TransactionSimulator.batch(spark, 300)), dir)
+    val server = CandleHttpServer.start(spark, dir)
+    val port = server.getAddress.getPort
+    val day = "from=2024-01-01 00:00:00&to=2024-01-02 00:00:00"
+    try {
+      var served = Seq.empty[(Int, String)]
+      val jobs = jobsDuring {
+        served = Seq(
+          "/symbols" -> null,
+          "/candles/AAPL/MINUTE" -> day,
+          "/candles/AAPL/MINUTE" -> "limit=3",
+          "/candles/AAPL/MINUTE/point" -> "key=202401010002",
+          "/candles/AAPL/MINUTE/recent" -> "n=5",
+          "/candles/MSFT/MONTH/recent" -> "n=2",
+          "/keys" -> "limit=20",
+          "/keys/AAPL" -> "limit=20",
+          "/keys/AAPL/HOUR" -> null).map { case (p, q) => fetch(port, p, q) }
+      }
+      assert(jobs === 0)
+      assert(served.forall(_._1 == 200) && served.forall(_._2 != "[]"), served.mkString("\n"))
+
+      val hours = "from=2024-01-01 00:00:00&to=2024-01-01 06:00:00"
+      val (code, filledBody) = fetch(port, "/candles/AAPL/HOUR", s"$hours&fill=true")
+      assert(code === 200)
+      val filled = spark.read.json(Seq(filledBody).toDS().as[String])
+      val stored = spark.read.json(Seq(fetch(port, "/candles/AAPL/HOUR", hours)._2).toDS().as[String])
+      assert(stored.count() > 0)
+      assert(filled.filter(!col("is_gap")).select("window_start", "close").collect().toSet ===
+        stored.select("window_start", "close").collect().toSet)
+    } finally server.stop(0)
+  }
+
+  /** Puts a `_temporary/` copy of a data file, a `_SUCCESS` marker and
+    * a stray `.crc` file into `dir`: a reader that took any of them for
+    * data would serve extra rows or fail.
+    */
+  private def litter(dir: JPath): Unit = {
+    val data = Files.list(dir).iterator().asScala.find(_.toString.endsWith(".parquet")).get
+    val tmp = Files.createDirectories(dir.resolve("_temporary").resolve("0"))
+    Files.copy(data, tmp.resolve(data.getFileName))
+    Files.createFile(dir.resolve("_SUCCESS"))
+    Files.write(dir.resolve(".stray.crc"), Array[Byte](1, 2, 3))
+  }
+
+  test("every route serves CandleQueries' toJSON bytes on both store layouts under a hidden parent") {
+    def t(s: String) = Timestamp.valueOf(s)
+    val symbols = Seq("AAPL", "0700")
+    val txns = symbols.zipWithIndex.flatMap { case (sym, i) =>
+      Seq(StockTransaction(sym, 10.0 + i, 5, t("2024-01-02 09:30:10")),
+        StockTransaction(sym, 11.5 + i, 2, t("2024-01-02 09:31:20")),
+        StockTransaction(sym, 9.25 + i, 1, t("2024-01-03 14:05:00")),
+        StockTransaction(sym, 12.0 + i, 4, t("2024-02-05 10:00:00")))
+    }.toDF()
+    val mem = Candles.multiTimeframe(txns).persist()
+    // a hidden directory above the store: only names below a partition
+    // directory may be judged hidden
+    val parent = Files.createDirectories(
+      Files.createTempDirectory("http-layouts").resolve(".hidden-parent"))
+    val written = parent.resolve("written")
+    CandleStore.write(mem, written.toString)
+    litter(written.resolve("timeframe=MINUTE").resolve("symbol=AAPL"))
+    val merged = parent.resolve("merged")
+    CandleStream.cascadeMerge(Candles.minuteCandles(txns), merged.toString)
+    litter(merged.resolve("timeframe=MINUTE").resolve("symbol=0700").resolve("window_date=2024-01-02"))
+    litter(merged.resolve("timeframe=MONTH").resolve("symbol=AAPL").resolve("window_date=2024-01-01"))
+
+    def keys(df: DataFrame): String =
+      df.select(Candles.candleKeyDynamic.as("key")).orderBy("key")
+        .collect().map(k => "\"" + k.getString(0) + "\"").mkString("[", ",", "]")
+
+    try for (store <- Seq(written, merged)) {
+      val server = CandleHttpServer.start(spark, store.toString)
+      val port = server.getAddress.getPort
+      def served(path: String, query: String = null): String = {
+        val (code, body) = fetch(port, path, query)
+        assert(code === 200, s"$store $path?$query")
+        body
+      }
+      try {
+        assert(served("/symbols") ===
+          mem.select("symbol").distinct().orderBy("symbol").toJSON.collect().mkString("[", ",", "]"))
+        assert(served("/keys") === keys(mem), s"$store keys")
+        for (sym <- symbols) {
+          assert(served(s"/keys/$sym") === keys(mem.filter(col("symbol") === sym)), s"$store keys $sym")
+          for (tf <- CandleTimeFrame.all) {
+            val at = s"$store $sym $tf"
+            val (from, to) = ("2024-01-01 00:00:00", "2024-03-01 00:00:00")
+            val range = served(s"/candles/$sym/$tf", s"from=$from&to=$to")
+            assert(range === jsonRows(CandleQueries.range(mem, sym, tf, from, to)), s"range $at")
+            assert(range != "[]", s"range $at")
+            val key = "202401020931".take(CandleTimeFrame.keyFormat(tf).length)
+            val point = served(s"/candles/$sym/$tf/point", s"key=$key")
+            assert(point === jsonRows(CandleQueries.pointLookup(mem, sym, tf, key)), s"point $at")
+            assert(point != "[]", s"point $at")
+            assert(served(s"/candles/$sym/$tf/recent", "n=2") ===
+              jsonRows(CandleQueries.recent(mem, tf, 2).filter(col("symbol") === sym)), s"recent $at")
+            assert(served(s"/keys/$sym/$tf") ===
+              keys(mem.filter(col("symbol") === sym && col("timeframe") === tf)), s"keys $at")
+          }
+        }
+      } finally server.stop(0)
+    } finally mem.unpersist()
   }
 }
