@@ -63,10 +63,11 @@ object SparkEntry {
 
   /** The multi-timeframe candle store, materialized ONCE per
     * (process, sfDir) at a stable scratch path. q_store_recent /
-    * q_store_point / q_candle_keys grade the partition-pruned READ
-    * path (the Redis-key-scan analogue); rebuilding the store inside
-    * every timed invocation made their bench numbers measure the
-    * partitioned small-file WRITE instead — the r6 sweep's worst
+    * q_store_point / q_candle_keys grade the store's lookups, the
+    * driver-side read every gateway route runs (the Redis-key-scan
+    * analogue); rebuilding the store inside every timed invocation
+    * made their bench numbers measure the partitioned small-file
+    * WRITE instead — the r6 sweep's worst
     * noise source — and leaked a temp dir per call. q_store_roundtrip
     * is the one query whose semantics IS write→read; it keeps a fresh
     * store per invocation.
@@ -1029,8 +1030,9 @@ object SparkEntry {
     "q_store_roundtrip" -> ((s, dir) => {
       // the complete reference workflow under the correctness gate:
       // aggregate → write the partitioned store (Redis analog) →
-      // partition-pruned range read back; must equal computing the
-      // range directly from raw events (the oracle does the latter)
+      // range read back on the driver, as the gateway reads it; must
+      // equal computing the range directly from raw events (the
+      // oracle does the latter)
       import graft.operators.CandleStore
       val store = java.nio.file.Files.createTempDirectory("q_store").toString
       registerScratchCleanup(store)
@@ -1043,16 +1045,17 @@ object SparkEntry {
     "q_store_recent" -> ((s, dir) => {
       // store-backed recent-N: the materialized-store variant of
       // q_candle_recent — the store is built once per process
-      // (candleStoreOnce) so the graded cost is the partition-pruned
-      // read; must equal the direct computation (the oracle's path)
+      // (candleStoreOnce) so the graded cost is the driver-side read
+      // of each symbol's directory, done when the frame is built;
+      // must equal the direct computation (the oracle's path)
       import graft.operators.CandleStore
       candleOut(CandleStore.recent(s, candleStoreOnce(s, dir), CandleTimeFrame.Minute, 5)
         .select(Candles.candleColumns: _*))
     }),
     "q_store_point" -> ((s, dir) => {
-      // store-backed point lookup (reference's Redis key get ≙
-      // partition-pruned scan + key-format equality); store built once
-      // per process — the graded cost is the pruned lookup
+      // store-backed point lookup (reference's Redis key get ≙ a
+      // driver-side read of one directory + key-format equality);
+      // store built once per process — the graded cost is that read
       import graft.operators.CandleStore
       candleOut(CandleStore.point(s, candleStoreOnce(s, dir), "view",
           CandleTimeFrame.Day, "20240115")
@@ -1064,8 +1067,8 @@ object SparkEntry {
       // key enumeration over a materialized store (reference
       // getSymbolCandleKeys, CandleStickService.kt:185-187): the
       // multi-timeframe store is built once per process, then one
-      // symbol's keys are enumerated — the symbol filter prunes to its
-      // partitions across all four timeframes (the graded cost, the
+      // symbol's keys are enumerated on the driver from its
+      // directories across all four timeframes (the graded cost, the
       // Redis-prefix-scan analogue); the oracle rebuilds the same
       // candle:{symbol}:{tf}:{dateKey} strings from raw events
       import graft.operators.CandleStore

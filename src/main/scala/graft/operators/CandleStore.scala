@@ -4,9 +4,13 @@ import java.time.LocalDate
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.execution.datasources.DataSource
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.DriverReads
 import org.apache.spark.sql.types.{DateType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.model.Candle
 
@@ -17,30 +21,26 @@ import graft.model.Candle
   *
   * The reference's hierarchical key `candle:{symbol}:{tf}:{date}` maps
   * to a parquet layout partitioned by (timeframe, symbol): a point or
-  * range lookup prunes to one directory, and the date predicate prunes
-  * row groups via parquet min/max stats on window_start. At 100 TB,
-  * this is the difference between a full scan and reading a few
-  * megabytes; with ~thousands of symbols, directory count stays
-  * manageable (4 TFs × |symbols|). For ultra-high symbol cardinality,
-  * swap `symbol` for `pmod(xxhash64(symbol), nBuckets)` — the read
-  * path below would then prune on the bucket column.
+  * range lookup reads one directory; with ~thousands of symbols,
+  * directory count stays manageable (4 TFs × |symbols|).
   *
-  * [[range]], [[point]], [[recent]] and [[candleKeys]] — the batch
-  * `q_store_*` queries — never resolve the whole store: they read only
-  * the directories their timeframe and/or symbol name, with the schema
-  * of [[graft.model.Candle]] instead of one inferred from parquet
-  * footers. That skips both the full-store listing and the
-  * footer-inference job, and keeps a numeric-looking symbol such as
-  * `0700` a string. A named directory that does not exist reads as an
-  * empty frame. Both layouts resolve this way: `(timeframe, symbol)`
-  * from [[write]] and `(timeframe, symbol, window_date)` from
-  * `CandleStream.cascadeMerge`. The HTTP gateway answers the same
-  * queries without a Spark job, reading the same directories on the
-  * driver (`graft.serving.LocalStore`).
+  * [[range]], [[point]], [[recent]], [[candleKeys]] and [[keys]] — the
+  * batch `q_store_*` / `q_candle_keys` queries — answer through
+  * [[LocalStore]], the reader behind every gateway route: they list
+  * only the directories their timeframe and/or symbol name and decode
+  * those files on the driver, when the DataFrame is built. No Spark job
+  * runs, and the frame is a local relation of the answer in the schema
+  * of [[graft.model.Candle]], so a numeric-looking symbol such as
+  * `0700` stays a string. A named directory that does not exist reads
+  * as no rows. Both layouts read this way: `(timeframe, symbol)` from
+  * [[write]] and `(timeframe, symbol, window_date)` from
+  * `CandleStream.cascadeMerge`. [[read]] stays a Spark scan of the
+  * whole store; `CandleQueries` over it is the reference each lookup
+  * equals.
   *
-  * The incremental write path reads the same way, one level deeper:
-  * `CandleStream.mergeBatchIntoStore` opens only the `(timeframe,
-  * symbol, window_date)` partitions its batch touches
+  * The incremental write path reads with Spark scans, the only ones
+  * besides [[read]]: `CandleStream.mergeBatchIntoStore` opens only the
+  * `(timeframe, symbol, window_date)` partitions its batch touches
   * ([[readPartitions]]), and `CandleStream.cascadeMerge` rolls each
   * touched month up from that month's stored DAY partitions
   * ([[readDates]]), not from its minutes. `CandleBackfill` judges a
@@ -65,8 +65,12 @@ object CandleStore {
       .partitionBy("timeframe", "symbol")
       .parquet(path)
 
+  /** The whole store as a Spark scan, its schema inferred from the
+    * files. The path is taken literally, never as a glob, as in every
+    * read of the store.
+    */
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    spark.read.option(DataSource.GLOB_PATHS_KEY, "false").parquet(path)
 
   /** The schema of [[graft.model.Candle]]: the store's columns. */
   private[graft] val candleSchema: StructType = Encoders.product[Candle].schema
@@ -74,40 +78,26 @@ object CandleStore {
   /** [[candleSchema]] plus the `window_date` partition column. */
   private val partitionedSchema = candleSchema.add("window_date", DateType)
 
-  /** The `timeframe=…` partition directories directly under `root`. */
-  private def timeframeDirs(fs: FileSystem, root: Path): Seq[Path] =
-    fs.listStatus(root).toSeq.map(_.getPath)
-      .filter(_.getName.startsWith("timeframe="))
-
   /** `parent/column=value`, the value escaped exactly as Spark's
     * partitioned writer escapes it (`A:B` → `symbol=A%3AB`).
     */
   private[graft] def partitionDir(parent: Path, column: String, value: String): Path =
     new Path(parent, ExternalCatalogUtils.getPartitionPathString(column, value))
 
-  /** The store restricted to the `timeframe=…/symbol=…` directories
-    * that `tf` and `symbol` name (an absent filter spans every stored
-    * value), read with the model schema. Directory names are escaped
-    * exactly as Spark's partitioned writer escapes them; directories
-    * that do not exist are skipped, and when none exists the result
-    * is an empty frame rather than a PATH_NOT_FOUND error.
+  /** The values of the `column=value` directories directly under `dir`,
+    * unescaped: the inverse of [[partitionDir]]. None when `dir` does
+    * not exist.
     */
-  private def readScoped(spark: SparkSession, path: String,
-                         tf: Option[String], symbol: Option[String]): DataFrame = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tfDirs = tf match {
-      case Some(t) => Seq(partitionDir(root, "timeframe", t))
-      case None => timeframeDirs(fs, root)
-    }
-    readDirs(spark, path, fs,
-      symbol.fold(tfDirs)(s => tfDirs.map(partitionDir(_, "symbol", s))), candleSchema)
+  private[operators] def partitionValues(fs: FileSystem, dir: Path, column: String): Seq[String] = {
+    val prefix = s"$column="
+    DriverReads.children(fs, dir).filter(_.isDirectory).map(_.getPath.getName)
+      .filter(_.startsWith(prefix))
+      .map(n => ExternalCatalogUtils.unescapePathName(n.stripPrefix(prefix)))
   }
 
-  /** The `(timeframe, symbol, window_date)` partitions named by `keys`
-    * — [[readScoped]] one level deeper, with `window_date` (a
-    * `yyyy-MM-dd` string, as the writer formats a date partition) as
-    * the third level. Read with the model schema plus `window_date`;
+  /** The `(timeframe, symbol, window_date)` partitions named by `keys`,
+    * with `window_date` a `yyyy-MM-dd` string, as the writer formats a
+    * date partition. Read with the model schema plus `window_date`;
     * absent partitions are skipped. A merge reads its partitions
     * this way: it lists and opens just these directories, never the
     * whole store.
@@ -144,6 +134,8 @@ object CandleStore {
 
   /** The existing ones of `dirs` (partition directories under the store
     * at `path`) read with `schema`, or an empty frame when none exists.
+    * Paths are taken literally, so a store root whose name holds glob
+    * metacharacters (`run[1]`) still reads.
     */
   private def readDirs(spark: SparkSession, path: String, fs: FileSystem,
                        dirs: Seq[Path], schema: StructType): DataFrame = {
@@ -151,63 +143,72 @@ object CandleStore {
     if (present.isEmpty)
       spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
     else spark.read.schema(schema).option("basePath", path)
+      .option(DataSource.GLOB_PATHS_KEY, "false")
       .parquet(present.map(_.toString): _*)
   }
 
   /** The `window_date` values stored under timeframe `tf`, for any
-    * symbol, from a glob over the `window_date=` directories under
-    * `timeframe=tf` through the Hadoop FileSystem: no Spark job, and
-    * no data file is opened. Empty when the store does not exist.
+    * symbol, from a listing of the `symbol=…/window_date=…` directories
+    * under `timeframe=tf`: no Spark job, and no data file is opened.
+    * Empty when the store does not exist.
     */
   private[graft] def windowDates(spark: SparkSession, path: String, tf: String): Set[String] = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prefix = "window_date="
-    Option(fs.globStatus(new Path(partitionDir(root, "timeframe", tf), s"symbol=*/$prefix*")))
-      .toSeq.flatten.filter(_.isDirectory).map(_.getPath.getName)
-      .map(n => ExternalCatalogUtils.unescapePathName(n.stripPrefix(prefix))).toSet
+    val tfDir = partitionDir(new Path(path), "timeframe", tf)
+    val fs = tfDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    partitionValues(fs, tfDir, "symbol")
+      .flatMap(s => partitionValues(fs, partitionDir(tfDir, "symbol", s), "window_date")).toSet
   }
 
-  /** Range query against the store: reads the one (timeframe, symbol)
-    * directory; the window_start range hits row-group pruning.
+  /** The candles of `symbol` in `tf` with window_start in `[from,
+    * to)`, by window_start: `CandleQueries.range` over the store.
+    * `from` and `to` parse as a string → timestamp cast parses them, in
+    * the session time zone; one that is not a timestamp is an
+    * `IllegalArgumentException` naming it. A driver read through
+    * [[LocalStore]] of the one `(timeframe, symbol)` directory, when
+    * the frame is built; no Spark job runs.
     */
   def range(spark: SparkSession, path: String, symbol: String, tf: String,
-            from: String, to: String): DataFrame =
-    CandleQueries.range(readScoped(spark, path, Some(tf), Some(symbol)),
-      symbol, tf, from, to)
+            from: String, to: String): DataFrame = {
+    val store = new LocalStore(spark, path)
+    def at(ts: String): Long = DriverReads.parseTimestamp(ts, store.zone).getOrElse(
+      throw new IllegalArgumentException(s"not a timestamp: $ts"))
+    DriverReads.localFrame(spark, candleSchema, store.range(symbol, tf, at(from), at(to), Int.MaxValue))
+  }
 
-  /** Point lookup by the reference's date-key format, over the one
-    * (timeframe, symbol) directory.
+  /** Point lookup by the reference's date-key format:
+    * `CandleQueries.pointLookup` over the store. A driver read through
+    * [[LocalStore]] of the one `(timeframe, symbol)` directory, when
+    * the frame is built; no Spark job runs.
     */
   def point(spark: SparkSession, path: String, symbol: String, tf: String,
             dateKey: String): DataFrame =
-    CandleQueries.pointLookup(readScoped(spark, path, Some(tf), Some(symbol)),
-      symbol, tf, dateKey)
+    DriverReads.localFrame(spark, candleSchema, new LocalStore(spark, path).point(symbol, tf, dateKey))
 
-  /** Latest n candles per symbol from the store (reads the timeframe's
-    * directory only; per-symbol top-k via WindowGroupLimit, no global
-    * sort).
+  /** Latest n candles per symbol: `CandleQueries.recent` over the
+    * store. A driver read through [[LocalStore]] of each symbol
+    * directory under `timeframe=tf`, when the frame is built; no Spark
+    * job runs.
     */
-  def recent(spark: SparkSession, path: String, tf: String, n: Int): DataFrame =
-    CandleQueries.recent(readScoped(spark, path, Some(tf), None), tf, n)
+  def recent(spark: SparkSession, path: String, tf: String, n: Int): DataFrame = {
+    val store = new LocalStore(spark, path)
+    DriverReads.localFrame(spark, candleSchema, store.symbols(tf).flatMap(store.recent(_, tf, n)))
+  }
 
   /** Enumerate stored candle keys in the reference's
-    * `candle:{symbol}:{TF}:{dateKey}` format (reference:
-    * service/CandleStickService.kt:176-196 getAllCandleKeys /
-    * getSymbolCandleKeys / getSymbolTimeFrameCandleKeys — Redis
-    * `KEYS candle:…*` scans). Optional symbol/timeframe filters pick
-    * the directories read, so a filtered enumeration resolves only the
-    * matching directories instead of the whole store — the Spark
-    * analogue of Redis's prefix scan. The same filters also stay on the
-    * partition columns, so the plan shows them as PartitionFilters.
+    * `candle:{symbol}:{TF}:{dateKey}` format, as a one-column `key`
+    * frame in key order (reference: service/CandleStickService.kt:176-196
+    * getAllCandleKeys / getSymbolCandleKeys /
+    * getSymbolTimeFrameCandleKeys — Redis `KEYS candle:…*` scans).
+    * Optional symbol/timeframe filters pick the directories read, the
+    * analogue of Redis's prefix scan. A driver read through
+    * [[LocalStore]], when the frame is built; no Spark job runs.
     */
   def candleKeys(spark: SparkSession, path: String,
                  symbol: Option[String] = None,
                  tf: Option[String] = None): DataFrame =
-    Seq(symbol.map(col("symbol") === _), tf.map(col("timeframe") === _)).flatten
-      .foldLeft(readScoped(spark, path, tf, symbol))(_.filter(_))
-      .select(Candles.candleKeyDynamic.as("key"))
-      .orderBy("key")
+    DriverReads.localFrame(spark, new StructType().add("key", "string"),
+      new LocalStore(spark, path).keys(symbol, tf, None, Int.MaxValue)
+        .map(k => InternalRow(UTF8String.fromString(k))))
 
   /** Compact a store in place: streaming/incremental appends leave
     * many small files per partition; rewrite each (timeframe, symbol)
@@ -229,50 +230,16 @@ object CandleStore {
     StoreOps.swapInPlace(spark, path, tmp)
   }
 
-  /** Bucketed store layout for ultra-high symbol cardinality: with
-    * millions of symbols, one directory per symbol explodes the
-    * filesystem metadata, so partition by (timeframe, symbol_bucket =
-    * hash(symbol) mod nBuckets) instead. A symbol lookup computes its
-    * bucket (pruning to 1/nBuckets of the data), and parquet row-group
-    * stats on the symbol column prune inside the bucket (files are
-    * written symbol-then-time sorted to keep those stats tight).
+  /** All stored (timeframe, symbol) combos as two string columns — the
+    * analog of the reference's Redis `keys candle:*` scans
+    * (CandleStickService.kt:181-196). The values are the partition
+    * directory names, listed on the driver when the frame is built; no
+    * Spark job runs and no data file is opened.
     */
-  def writeBucketed(candles: DataFrame, path: String, nBuckets: Int = 64,
-                    mode: SaveMode = SaveMode.Overwrite): Unit =
-    candles
-      .withColumn("symbol_bucket", pmod(xxhash64(col("symbol")), lit(nBuckets)))
-      .repartition(col("timeframe"), col("symbol_bucket"))
-      // lead with the partition columns: the dynamic-partition writer
-      // inserts its own sort on (timeframe, symbol_bucket) otherwise,
-      // which would reorder rows and loosen the per-file symbol/time
-      // row-group stats the pruning claim above relies on
-      .sortWithinPartitions(
-        col("timeframe"), col("symbol_bucket"), col("symbol"), col("window_start"))
-      .write
-      .mode(mode)
-      .partitionBy("timeframe", "symbol_bucket")
-      .parquet(path)
-
-  /** Range query against a bucketed store: timeframe + the symbol's
-    * bucket hit partition pruning; symbol + time predicates hit
-    * row-group pruning inside the bucket.
-    */
-  def rangeBucketed(spark: SparkSession, path: String, symbol: String,
-                    tf: String, from: String, to: String,
-                    nBuckets: Int = 64): DataFrame = {
-    val bucketed = read(spark, path)
-      .filter(col("symbol_bucket") ===
-        pmod(xxhash64(lit(symbol)), lit(nBuckets)))
-    CandleQueries.range(bucketed, symbol, tf, from, to)
-      .drop("symbol_bucket")
+  def keys(spark: SparkSession, path: String): DataFrame = {
+    val store = new LocalStore(spark, path)
+    DriverReads.localFrame(spark, StructType(Seq(candleSchema("timeframe"), candleSchema("symbol"))),
+      for (tf <- store.timeframes; s <- store.symbols(tf))
+        yield InternalRow(UTF8String.fromString(tf), UTF8String.fromString(s)))
   }
-
-  /** All stored (timeframe, symbol) combos — the analog of the
-    * reference's Redis `keys candle:*` scans
-    * (CandleStickService.kt:181-196). The values come from partition
-    * directory names, but resolving the whole store and the distinct
-    * still run Spark jobs over it.
-    */
-  def keys(spark: SparkSession, path: String): DataFrame =
-    read(spark, path).select(col("timeframe"), col("symbol")).distinct()
 }

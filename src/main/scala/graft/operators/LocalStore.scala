@@ -1,33 +1,33 @@
-package graft.serving
+package graft.operators
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.graft.{DriverReads, PartitionReader}
 import org.apache.spark.unsafe.types.UTF8String
 
 import scala.jdk.CollectionConverters._
 
 import graft.model.CandleTimeFrame
-import graft.operators.CandleStore
 
-/** The candle store at `root` read on the driver, for the gateway's
-  * routes: a request lists the `timeframe=…/symbol=…` directories it
-  * names and decodes their data files with Spark's own Parquet reader
-  * (built once here), so no Spark job runs. Both store layouts read
-  * this way, `(timeframe, symbol)` and `(timeframe, symbol,
-  * window_date)`, since the files under a symbol directory are listed
-  * at any depth. Rows are in the candle schema
-  * (`CandleStore.candleSchema`); only the rows a route returns are
-  * copied, so a request holds at most its reply on the heap.
+/** The candle store at `root` read on the driver: the store's one
+  * reader for lookups, behind both [[CandleStore]]'s `range`, `point`,
+  * `recent`, `candleKeys` and `keys` and every gateway route. A lookup
+  * lists the `timeframe=…/symbol=…` directories it names and decodes
+  * their data files with Spark's own Parquet reader (built once here),
+  * so no Spark job runs. Both store layouts read this way,
+  * `(timeframe, symbol)` and `(timeframe, symbol, window_date)`, since
+  * the files under a symbol directory are listed at any depth. Rows are
+  * in the candle schema ([[CandleStore.candleSchema]]); only the rows a
+  * lookup returns are copied, so a request holds at most its reply on
+  * the heap.
   *
-  * Each route answers what the DataFrame query of the same name in
-  * `CandleQueries` / `CandleStore` answers over the same directories:
-  * timestamps parse as a cast parses them and keys format as
-  * `date_format` formats them, both in the session time zone.
+  * The reference each lookup must equal is the `CandleQueries` query of
+  * the same name over a frame of the same candles: timestamps parse as
+  * a cast parses them and keys format as `date_format` formats them,
+  * both in the session time zone.
   */
-private[serving] final class LocalStore(spark: SparkSession, root: String) {
+private[graft] final class LocalStore(spark: SparkSession, root: String) {
   private val rootPath = new Path(root)
   private val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
   private val reader = new PartitionReader(spark, CandleStore.candleSchema, Seq("symbol", "timeframe"))
@@ -46,14 +46,6 @@ private[serving] final class LocalStore(spark: SparkSession, root: String) {
 
   private def scan(symbol: String, tf: String)(f: InternalRow => Unit): Unit =
     reader.foreach(CandleStore.partitionDir(tfDir(tf), "symbol", symbol), Seq(symbol, tf))(f)
-
-  /** The values of the `column=value` directories under `dir`. */
-  private def values(dir: Path, column: String): Seq[String] = {
-    val prefix = s"$column="
-    DriverReads.children(fs, dir).filter(_.isDirectory).map(_.getPath.getName)
-      .filter(_.startsWith(prefix))
-      .map(n => ExternalCatalogUtils.unescapePathName(n.stripPrefix(prefix)))
-  }
 
   /** The first `k` candles with window_start in `[from, to)` (epoch
     * microseconds), by window_start.
@@ -88,15 +80,16 @@ private[serving] final class LocalStore(spark: SparkSession, root: String) {
 
   /** The first `k` candle keys `candle:{symbol}:{tf}:{dateKey}` after
     * `after` (exclusive) in string order, over the stored candles of
-    * `symbol` and `tf` (every stored value when absent).
+    * `symbol` and `tf` (every stored value when absent). A timeframe
+    * that is not a [[CandleTimeFrame]] has no keys.
     */
   def keys(symbol: Option[String], tf: Option[String], after: Option[String], k: Int): Seq[String] = {
     val floor = after.map(UTF8String.fromString)
     val least = new Least[UTF8String](k, Ordering.fromLessThan(_.binaryCompare(_) < 0))
     val formatters = keyFormatters.get()
     for {
-      t <- tf.fold(values(rootPath, "timeframe").filter(formatters.contains))(Seq(_))
-      s <- symbol.fold(values(tfDir(t), "symbol"))(Seq(_))
+      t <- tf.fold(timeframes)(Seq(_)).filter(formatters.contains)
+      s <- symbol.fold(symbols(t))(Seq(_))
     } {
       val prefix = s"candle:$s:$t:"
       val format = formatters(t)
@@ -108,11 +101,16 @@ private[serving] final class LocalStore(spark: SparkSession, root: String) {
     least.sorted.map(_.toString)
   }
 
+  /** The stored timeframes, from the `timeframe=…` directory names. */
+  def timeframes: Seq[String] = CandleStore.partitionValues(fs, rootPath, "timeframe")
+
+  /** The symbols stored under `tf`, from the `symbol=…` directory names. */
+  def symbols(tf: String): Seq[String] = CandleStore.partitionValues(fs, tfDir(tf), "symbol")
+
   /** Every stored symbol, from the `timeframe=…/symbol=…` directory
     * names alone, sorted.
     */
-  def symbols: Seq[String] =
-    values(rootPath, "timeframe").flatMap(tf => values(tfDir(tf), "symbol")).distinct.sorted
+  def symbols: Seq[String] = timeframes.flatMap(symbols(_)).distinct.sorted
 
   /** The `k` least of the values offered, by `ord`. An offered value is
     * kept through `own` (a copy of a reused row) only when it ranks
@@ -122,7 +120,7 @@ private[serving] final class LocalStore(spark: SparkSession, root: String) {
     private val heap = new java.util.PriorityQueue[T](ord.reverse)
 
     def offer(t: T, own: T => T): Unit =
-      if (heap.size < k || ord.lt(t, heap.peek)) {
+      if (heap.size < k || k > 0 && ord.lt(t, heap.peek)) {
         heap.add(own(t))
         if (heap.size > k) heap.poll()
       }

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.model.CandleTimeFrame
-import graft.operators.{CandleStore, Candles}
+import graft.operators.{CandleStore, Candles, LocalStore}
 
 /** Thin HTTP query gateway over a CandleStore — the reference's
   * serving layer (reference: controller/StockChartController.kt:23-60,

@@ -7,8 +7,9 @@ import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
 import graft.model.StockTransaction
-import graft.operators.{CandleBackfill, Candles}
+import graft.operators.{CandleBackfill, Candles, CandleStore}
 import graft.sources.EventStore
+import graft.streaming.CandleStream
 
 class BackfillSpec extends SparkSpec {
   import spark.implicits._
@@ -86,5 +87,25 @@ class BackfillSpec extends SparkSpec {
       .select(Candles.candleColumns: _*)
     val got = spark.read.parquet(store).select(Candles.candleColumns: _*)
     assert(got.collect().toSet === want.collect().toSet)
+  }
+
+  test("a store root named with glob metacharacters merges, reads and backfills") {
+    def storeIn(prefix: String): String =
+      Files.createTempDirectory(prefix).resolve("store[v1]{a}").toString
+    val store = storeIn("glob-candles")
+    // the second merge reads back the partitions the first one wrote
+    val minutes = Candles.minuteCandles(day12.toDF())
+    CandleStream.cascadeMerge(minutes, store)
+    CandleStream.cascadeMerge(minutes, store)
+    val want = Candles.multiTimeframe(day12.toDF()).select(Candles.candleColumns: _*)
+    assert(CandleStore.read(spark, store).select(Candles.candleColumns: _*).collect().toSet ===
+      want.collect().toSet)
+
+    // done days are found, so a second run has nothing to do
+    val events = Files.createTempDirectory("glob-events").toString
+    EventStore.write(day12.toDF(), events)
+    val backfilled = storeIn("glob-backfill")
+    assert(CandleBackfill.run(spark, events, backfilled) === Seq("2024-03-01", "2024-03-02"))
+    assert(CandleBackfill.run(spark, events, backfilled) === Nil)
   }
 }

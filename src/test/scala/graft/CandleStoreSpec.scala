@@ -1,11 +1,12 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.model.CandleTimeFrame
-import graft.operators.{Candles, CandleStore, MarketAnalytics}
+import graft.operators.{CandleQueries, Candles, CandleStore, MarketAnalytics}
 import graft.streaming.TransactionSimulator
 
 class CandleStoreSpec extends SparkSpec {
@@ -22,14 +23,9 @@ class CandleStoreSpec extends SparkSpec {
     val all = CandleStore.read(spark, dir)
     assert(all.count() === candles.count())
 
-    // point lookup hits exactly one partition directory: the physical
-    // plan's pushed partition filters must name both columns
     val point = CandleStore.point(spark, dir, "AAPL", CandleTimeFrame.Minute,
       "202401010002")
     assert(point.count() === 1)
-    val explained = point.queryExecution.executedPlan.toString
-    assert(explained.contains("PartitionFilters") &&
-      explained.contains("timeframe") && explained.contains("symbol"))
 
     val keys = CandleStore.keys(spark, dir)
     assert(keys.count() === 20) // 4 timeframes × 5 symbols
@@ -52,28 +48,29 @@ class CandleStoreSpec extends SparkSpec {
     assert(filesPerPartition === 1, s"expected 1 compacted file, got $filesPerPartition")
   }
 
-  test("bucketed store: range reads prune to the symbol's bucket and match direct computation") {
-    val dir = Files.createTempDirectory("bucketstore").toString
-    val candles = Candles.multiTimeframe(TransactionSimulator.batch(spark, 300))
-    CandleStore.writeBucketed(candles, dir, nBuckets = 8)
-
-    // bounded directory count: buckets, not symbols
-    val minuteDirs = new java.io.File(s"$dir/timeframe=MINUTE").listFiles()
-      .filter(_.getName.startsWith("symbol_bucket=")).map(_.getName)
-    assert(minuteDirs.nonEmpty && minuteDirs.length <= 8)
-
-    val got = CandleStore.rangeBucketed(spark, dir, "AAPL", CandleTimeFrame.Minute,
-      "2024-01-01 00:00:00", "2024-01-02 00:00:00", nBuckets = 8)
-    val want = graft.operators.CandleQueries.range(
-      candles, "AAPL", CandleTimeFrame.Minute,
-      "2024-01-01 00:00:00", "2024-01-02 00:00:00")
-    assert(got.select(Candles.candleColumns: _*).collect().toSet
-      === want.select(Candles.candleColumns: _*).collect().toSet)
-    assert(got.count() > 0)
-    // the bucket predicate reaches the partition filters
-    val explained = got.queryExecution.executedPlan.toString
-    assert(explained.contains("PartitionFilters") &&
-      explained.contains("symbol_bucket"), s"no bucket pruning in:\n$explained")
+  test("a lookup opens only the partition it names: corrupt files beside it are never read") {
+    val dir = Files.createTempDirectory("candlestore-siblings").toString
+    val candles = Candles.multiTimeframe(TransactionSimulator.batch(spark, 300)).persist()
+    CandleStore.write(candles, dir)
+    // not Parquet: a reader that opened either file would fail
+    for (sibling <- Seq("timeframe=MINUTE/symbol=MSFT", "timeframe=HOUR/symbol=AAPL"))
+      Files.write(Paths.get(dir, sibling, "part-99999-corrupt.parquet"), "not parquet".getBytes)
+    val (sym, tf, key) = ("AAPL", CandleTimeFrame.Minute, "202401010002")
+    val (from, to) = ("2024-01-01 00:00:00", "2024-01-02 00:00:00")
+    def rows(df: DataFrame) = df.select(Candles.candleColumns: _*).collect().toSeq
+    try {
+      val range = rows(CandleStore.range(spark, dir, sym, tf, from, to))
+      assert(range.nonEmpty && range === rows(CandleQueries.range(candles, sym, tf, from, to)))
+      val point = rows(CandleStore.point(spark, dir, sym, tf, key))
+      assert(point.length === 1 && point === rows(CandleQueries.pointLookup(candles, sym, tf, key)))
+      assert(CandleStore.candleKeys(spark, dir, Some(sym), Some(tf)).as[String].collect() ===
+        candles.filter($"symbol" === sym && $"timeframe" === tf)
+          .select(Candles.candleKeyDynamic.as("key")).orderBy("key").as[String].collect())
+      val bad = intercept[IllegalArgumentException](CandleStore.range(spark, dir, sym, tf, "garbage", to))
+      assert(bad.getMessage.contains("garbage"))
+      // the planted files do fail a lookup of their own partition
+      intercept[Exception](CandleStore.range(spark, dir, "MSFT", tf, from, to).collect())
+    } finally candles.unpersist()
   }
 
   test("sessionize splits on the inactivity gap") {

@@ -441,6 +441,7 @@ class HttpServingSpec extends SparkSpec {
     val day = "from=2024-01-01 00:00:00&to=2024-01-02 00:00:00"
     try {
       var served = Seq.empty[(Int, String)]
+      var looked = Seq.empty[Array[org.apache.spark.sql.Row]]
       val jobs = jobsDuring {
         served = Seq(
           "/symbols" -> null,
@@ -452,9 +453,19 @@ class HttpServingSpec extends SparkSpec {
           "/keys" -> "limit=20",
           "/keys/AAPL" -> "limit=20",
           "/keys/AAPL/HOUR" -> null).map { case (p, q) => fetch(port, p, q) }
+        // the batch lookups answer through the same driver-side reader
+        looked = Seq(
+          CandleStore.range(spark, dir, "AAPL", CandleTimeFrame.Minute,
+            "2024-01-01 00:00:00", "2024-01-02 00:00:00"),
+          CandleStore.point(spark, dir, "AAPL", CandleTimeFrame.Minute, "202401010002"),
+          CandleStore.recent(spark, dir, CandleTimeFrame.Month, 2),
+          CandleStore.candleKeys(spark, dir),
+          CandleStore.candleKeys(spark, dir, Some("AAPL"), Some(CandleTimeFrame.Hour)),
+          CandleStore.keys(spark, dir)).map(_.collect())
       }
       assert(jobs === 0)
       assert(served.forall(_._1 == 200) && served.forall(_._2 != "[]"), served.mkString("\n"))
+      assert(looked.forall(_.nonEmpty))
 
       val hours = "from=2024-01-01 00:00:00&to=2024-01-01 06:00:00"
       val (code, filledBody) = fetch(port, "/candles/AAPL/HOUR", s"$hours&fill=true")
@@ -501,9 +512,11 @@ class HttpServingSpec extends SparkSpec {
     litter(merged.resolve("timeframe=MINUTE").resolve("symbol=0700").resolve("window_date=2024-01-02"))
     litter(merged.resolve("timeframe=MONTH").resolve("symbol=AAPL").resolve("window_date=2024-01-01"))
 
+    def quoted(keyFrame: DataFrame): String =
+      keyFrame.collect().map(k => "\"" + k.getString(0) + "\"").mkString("[", ",", "]")
     def keys(df: DataFrame): String =
-      df.select(Candles.candleKeyDynamic.as("key")).orderBy("key")
-        .collect().map(k => "\"" + k.getString(0) + "\"").mkString("[", ",", "]")
+      quoted(df.select(Candles.candleKeyDynamic.as("key")).orderBy("key"))
+    def rowSet(df: DataFrame) = df.select(Candles.candleColumns: _*).collect().toSet
 
     try for (store <- Seq(written, merged)) {
       val server = CandleHttpServer.start(spark, store.toString)
@@ -513,26 +526,42 @@ class HttpServingSpec extends SparkSpec {
         assert(code === 200, s"$store $path?$query")
         body
       }
+      // CandleStore's lookups over the same store, beside each route
+      val direct = store.toString
       try {
         assert(served("/symbols") ===
           mem.select("symbol").distinct().orderBy("symbol").toJSON.collect().mkString("[", ",", "]"))
         assert(served("/keys") === keys(mem), s"$store keys")
+        assert(quoted(CandleStore.candleKeys(spark, direct)) === keys(mem), s"$store candleKeys")
+        assert(CandleStore.keys(spark, direct).collect().toSet ===
+          mem.select("timeframe", "symbol").distinct().collect().toSet, s"$store CandleStore.keys")
+        for (tf <- CandleTimeFrame.all)
+          assert(rowSet(CandleStore.recent(spark, direct, tf, 2)) === rowSet(CandleQueries.recent(mem, tf, 2)),
+            s"$store CandleStore.recent $tf")
         for (sym <- symbols) {
           assert(served(s"/keys/$sym") === keys(mem.filter(col("symbol") === sym)), s"$store keys $sym")
+          assert(quoted(CandleStore.candleKeys(spark, direct, Some(sym))) ===
+            keys(mem.filter(col("symbol") === sym)), s"$store candleKeys $sym")
           for (tf <- CandleTimeFrame.all) {
             val at = s"$store $sym $tf"
             val (from, to) = ("2024-01-01 00:00:00", "2024-03-01 00:00:00")
             val range = served(s"/candles/$sym/$tf", s"from=$from&to=$to")
             assert(range === jsonRows(CandleQueries.range(mem, sym, tf, from, to)), s"range $at")
             assert(range != "[]", s"range $at")
+            assert(jsonRows(CandleStore.range(spark, direct, sym, tf, from, to)) === range,
+              s"CandleStore.range $at")
             val key = "202401020931".take(CandleTimeFrame.keyFormat(tf).length)
             val point = served(s"/candles/$sym/$tf/point", s"key=$key")
             assert(point === jsonRows(CandleQueries.pointLookup(mem, sym, tf, key)), s"point $at")
             assert(point != "[]", s"point $at")
+            assert(jsonRows(CandleStore.point(spark, direct, sym, tf, key)) === point,
+              s"CandleStore.point $at")
             assert(served(s"/candles/$sym/$tf/recent", "n=2") ===
               jsonRows(CandleQueries.recent(mem, tf, 2).filter(col("symbol") === sym)), s"recent $at")
-            assert(served(s"/keys/$sym/$tf") ===
-              keys(mem.filter(col("symbol") === sym && col("timeframe") === tf)), s"keys $at")
+            val tfKeys = keys(mem.filter(col("symbol") === sym && col("timeframe") === tf))
+            assert(served(s"/keys/$sym/$tf") === tfKeys, s"keys $at")
+            assert(quoted(CandleStore.candleKeys(spark, direct, Some(sym), Some(tf))) === tfKeys,
+              s"candleKeys $at")
           }
         }
       } finally server.stop(0)

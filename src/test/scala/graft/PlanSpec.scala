@@ -394,25 +394,6 @@ class PlanSpec extends SparkSpec {
       s"gram frame self-join reappeared in:\n$p")
   }
 
-  test("candleKeys: symbol+timeframe filters prune store partitions, not scan-then-filter") {
-    // key enumeration is a Redis-prefix-scan analogue — its whole
-    // scale story is that the filters land as PartitionFilters on the
-    // (timeframe, symbol)-partitioned store
-    val dir = java.nio.file.Files.createTempDirectory("plan-keys").toString
-    graft.operators.CandleStore.write(
-      graft.operators.Candles.multiTimeframe(
-        graft.streaming.TransactionSimulator.batch(spark, 200)), dir)
-    val p = graft.operators.CandleStore
-      .candleKeys(spark, dir, Some("AAPL"), Some("MINUTE"))
-      .queryExecution.executedPlan.toString
-    assert(p.contains("PartitionFilters:") &&
-      p.contains("(timeframe") && p.contains("(symbol"),
-      s"filters did not reach PartitionFilters in:\n$p")
-    // nothing should remain as a post-scan data filter
-    assert(!p.contains("PushedFilters: [IsNotNull"),
-      s"partition-column filters leaked into data filters in:\n$p")
-  }
-
   test("q_kmeans: assignment is a map-side argmin, corpus never windowed or exchanged") {
     // the per-iteration scale contract, tightened in r15: the argmin
     // over the broadcast centroid list is an array_min projection —
