@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -14,7 +15,8 @@ import graft.streaming.CandleStream
   *
   * Day detection is metadata-only on both sides: event days come from
   * the event store's partition listing, done days from a listing of
-  * the candle store's DAY `window_date=` directories (no Spark job).
+  * the candle store's MINUTE and DAY `window_date=` directories (no
+  * Spark job).
   * The day is the unit of increment — events appended late into an
   * already-processed day are picked up by re-merging that day
   * explicitly (pass `force`), the same restatement lever every
@@ -30,15 +32,17 @@ object CandleBackfill {
     */
   def run(spark: SparkSession, eventStorePath: String, candleStorePath: String,
           force: Seq[String] = Nil): Seq[String] = {
-    // a day is "done" only when its DAY candle exists: cascadeMerge
-    // writes minute candles first and the hour/day/month rollups in a
-    // second merge, so judging by the rollup (written last) makes an
-    // interrupted cascade self-healing — the next run re-processes the
-    // day instead of silently leaving the rollup timeframes stale.
-    // (A DAY candle's window_date IS the day, and it can only be
-    // written after that day's minute merge, so DAY coverage is exactly
-    // the set of fully-cascaded days.)
-    val doneDays = CandleStore.windowDates(spark, candleStorePath, CandleTimeFrame.Day)
+    // a day is "done" only when every symbol's minutes of it have a DAY
+    // candle: cascadeMerge swaps its DAY partitions in after all its
+    // other ones, so a cascade interrupted before or during those swaps
+    // leaves some (symbol, day) with minutes but no DAY candle, and the
+    // next run re-processes that day instead of leaving its roll-ups
+    // stale. Both sides are directory listings; no Spark job runs.
+    val root = new Path(candleStorePath)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val dayParts = CandleStore.partitions(fs, root, CandleTimeFrame.Day).toSet
+    val unfinished = CandleStore.partitions(fs, root, CandleTimeFrame.Minute).filterNot(dayParts)
+    val doneDays = dayParts.map(_._2) -- unfinished.map(_._2)
     // the event day list is metadata-scale; collecting it to drive the
     // pruned scan is the intended driver-side step (not a data collect)
     val missing = EventStore.dates(spark, eventStorePath).collect()

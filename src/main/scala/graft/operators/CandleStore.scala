@@ -1,9 +1,7 @@
 package graft.operators
 
-import java.time.LocalDate
-
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.execution.datasources.DataSource
@@ -20,9 +18,10 @@ import graft.model.Candle
   * service/CandleStickService.kt key scans).
   *
   * The reference's hierarchical key `candle:{symbol}:{tf}:{date}` maps
-  * to a parquet layout partitioned by (timeframe, symbol): a point or
-  * range lookup reads one directory; with ~thousands of symbols,
-  * directory count stays manageable (4 TFs × |symbols|).
+  * to a parquet layout partitioned by (timeframe, symbol, window_date),
+  * as the merges write it, or by (timeframe, symbol), as [[write]],
+  * [[compact]] and the append sink `CandleStream.toStore` write it: a
+  * lookup reads one `(timeframe, symbol)` directory at any depth.
   *
   * [[range]], [[point]], [[recent]], [[candleKeys]] and [[keys]] — the
   * batch `q_store_*` / `q_candle_keys` queries — answer through
@@ -38,13 +37,13 @@ import graft.model.Candle
   * whole store; `CandleQueries` over it is the reference each lookup
   * equals.
   *
-  * The incremental write path reads with Spark scans, the only ones
-  * besides [[read]]: `CandleStream.mergeBatchIntoStore` opens only the
-  * `(timeframe, symbol, window_date)` partitions its batch touches
-  * ([[readPartitions]]), and `CandleStream.cascadeMerge` rolls each
-  * touched month up from that month's stored DAY partitions
-  * ([[readDates]]), not from its minutes. `CandleBackfill` judges a
-  * day done from the DAY directory listing alone ([[windowDates]]).
+  * The incremental write path, `CandleStream.mergeBatchIntoStore` and
+  * `CandleStream.cascadeMerge`, is one Spark job per batch
+  * ([[CandleMerge]]): its tasks open only the `(timeframe, symbol,
+  * window_date)` partitions their rows touch, with Spark's Parquet
+  * reader, and the driver swaps the rewritten partitions in.
+  * `CandleBackfill` judges a day done from directory listings alone
+  * ([[partitions]]).
   */
 object CandleStore {
 
@@ -76,7 +75,7 @@ object CandleStore {
   private[graft] val candleSchema: StructType = Encoders.product[Candle].schema
 
   /** [[candleSchema]] plus the `window_date` partition column. */
-  private val partitionedSchema = candleSchema.add("window_date", DateType)
+  private[operators] val partitionedSchema = candleSchema.add("window_date", DateType)
 
   /** `parent/column=value`, the value escaped exactly as Spark's
     * partitioned writer escapes it (`A:B` → `symbol=A%3AB`).
@@ -95,68 +94,15 @@ object CandleStore {
       .map(n => ExternalCatalogUtils.unescapePathName(n.stripPrefix(prefix)))
   }
 
-  /** The `(timeframe, symbol, window_date)` partitions named by `keys`,
-    * with `window_date` a `yyyy-MM-dd` string, as the writer formats a
-    * date partition. Read with the model schema plus `window_date`;
-    * absent partitions are skipped. A merge reads its partitions
-    * this way: it lists and opens just these directories, never the
-    * whole store.
+  /** The `(symbol, window_date)` values of the
+    * `timeframe=tf/symbol=…/window_date=…` directories under `root`,
+    * from directory listings alone: no Spark job, and no data file is
+    * opened. Empty when there are none.
     */
-  private[graft] def readPartitions(spark: SparkSession, path: String,
-                                    keys: Seq[(String, String, String)]): DataFrame = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    readDirs(spark, path, fs, keys.map { case (tf, symbol, date) =>
-      partitionDir(partitionDir(partitionDir(root, "timeframe", tf), "symbol", symbol),
-        "window_date", date)
-    }, partitionedSchema)
-  }
-
-  /** The stored `tf` candles of each symbol in `dates` whose
-    * window_date is one of the dates listed for it, read with the
-    * model schema plus `window_date`. Each symbol's `tf` directory is
-    * read once, and a partition filter keeps the listed dates: a span
-    * of dates (a month's days) then costs one path per symbol, where a
-    * path per date would soon pass Spark's parallel-listing threshold
-    * and run a listing job. Absent symbols and dates are skipped.
-    */
-  private[graft] def readDates(spark: SparkSession, path: String, tf: String,
-                               dates: Map[String, Set[LocalDate]]): DataFrame = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private[operators] def partitions(fs: FileSystem, root: Path, tf: String): Seq[(String, String)] = {
     val tfDir = partitionDir(root, "timeframe", tf)
-    readDirs(spark, path, fs, dates.keys.toSeq.map(partitionDir(tfDir, "symbol", _)),
-      partitionedSchema)
-      .filter(dates.foldLeft(lit(false)) { case (keep, (symbol, ds)) =>
-        keep || (col("symbol") === symbol && col("window_date").isin(ds.toSeq: _*))
-      })
-  }
-
-  /** The existing ones of `dirs` (partition directories under the store
-    * at `path`) read with `schema`, or an empty frame when none exists.
-    * Paths are taken literally, so a store root whose name holds glob
-    * metacharacters (`run[1]`) still reads.
-    */
-  private def readDirs(spark: SparkSession, path: String, fs: FileSystem,
-                       dirs: Seq[Path], schema: StructType): DataFrame = {
-    val present = dirs.distinct.filter(fs.exists)
-    if (present.isEmpty)
-      spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
-    else spark.read.schema(schema).option("basePath", path)
-      .option(DataSource.GLOB_PATHS_KEY, "false")
-      .parquet(present.map(_.toString): _*)
-  }
-
-  /** The `window_date` values stored under timeframe `tf`, for any
-    * symbol, from a listing of the `symbol=…/window_date=…` directories
-    * under `timeframe=tf`: no Spark job, and no data file is opened.
-    * Empty when the store does not exist.
-    */
-  private[graft] def windowDates(spark: SparkSession, path: String, tf: String): Set[String] = {
-    val tfDir = partitionDir(new Path(path), "timeframe", tf)
-    val fs = tfDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     partitionValues(fs, tfDir, "symbol")
-      .flatMap(s => partitionValues(fs, partitionDir(tfDir, "symbol", s), "window_date")).toSet
+      .flatMap(s => partitionValues(fs, partitionDir(tfDir, "symbol", s), "window_date").map(s -> _))
   }
 
   /** The candles of `symbol` in `tf` with window_start in `[from,

@@ -1,13 +1,11 @@
 package graft.streaming
 
-import java.time.LocalDate
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.model.CandleTimeFrame
-import graft.operators.{CandleStore, Candles}
+import graft.operators.{CandleMerge, CandleRows, Candles}
 
 /** Structured Streaming candlestick pipeline — the direct analog of
   * the reference's Kafka Streams topology
@@ -168,11 +166,12 @@ object CandleStream {
     * overwrites the window's key on every update,
     * CandlestickAggregator.kt:270-277): candles stream in UPDATE mode
     * (each batch emits the windows that changed) and foreachBatch
-    * rewrites exactly the affected (timeframe, symbol, window date)
-    * partitions via dynamic partition overwrite — the store always
-    * holds the latest version of every candle, without rewriting
-    * history. Requires no watermark wait: current windows are visible
-    * immediately and refined in place.
+    * merges each batch into the store with [[mergeBatchIntoStore]] —
+    * the store always holds the latest version of every candle, without
+    * rewriting history. Requires no watermark wait: current windows are
+    * visible immediately and refined in place. `candles` must meet
+    * [[mergeBatchIntoStore]]'s preconditions in every batch, as an
+    * update-mode aggregation by (timeframe, symbol, window) does.
     */
   def upsertToStore(candles: DataFrame, path: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
@@ -184,63 +183,36 @@ object CandleStream {
       }
       .start()
 
-  /** Merge one candle batch into the partitioned store: rewrite
-    * exactly the (timeframe, symbol, window_date) partitions the batch
-    * touches via dynamic partition overwrite, carrying their unchanged
-    * rows. The batch is computed once (persisted here, so a caller
-    * need not persist it), its few partition keys are collected, and
-    * only those partition directories are read back
-    * ([[CandleStore.readPartitions]]); stored rows the batch supersedes
-    * (same timeframe, symbol and window_start) are dropped. The store
-    * at `path` need not exist yet. The batch must have the candle
-    * columns of [[Candles.candleColumns]].
+  /** Merge one candle batch into the partitioned store as one Spark job
+    * ([[graft.operators.CandleMerge]]): the batch is grouped by
+    * (timeframe, symbol, window_date), and each group's task rewrites
+    * that partition, its stored rows with those the batch supersedes
+    * (same window_start) replaced. Nothing is rolled up. The rewritten
+    * partitions are swapped in by timeframe, MINUTE, HOUR and MONTH
+    * first and DAY last; no partition the batch does not touch is read
+    * or written. The batch is computed once. The store at `path` need
+    * not exist yet.
+    *
+    * Preconditions: the batch has the candle columns of
+    * [[Candles.candleColumns]] and at most one candle per (timeframe,
+    * symbol, window_start) (checked), and no other merge writes the
+    * store meanwhile.
     */
   def mergeBatchIntoStore(rawBatch: DataFrame, path: String): Unit =
-    mergePartitions(rawBatch, path)((_, _) => ())
-
-  /** [[mergeBatchIntoStore]], then `andThen` on the rewritten
-    * partitions: the merged rows (persisted until `andThen` returns)
-    * and their (timeframe, symbol, window_date) keys.
-    */
-  private def mergePartitions(rawBatch: DataFrame, path: String)
-      (andThen: (DataFrame, Seq[(String, String, String)]) => Unit): Unit = {
-    val spark = rawBatch.sparkSession
-    val partCols = Seq("timeframe", "symbol", "window_date")
-    val keyCols = Seq("timeframe", "symbol", "window_start")
-    val batch = rawBatch.withColumn("window_date", to_date(col("window_start"))).persist()
-    try {
-      // the string cast formats a date the way the partitioned writer
-      // names its directory, so the directories read are those written
-      val keys = batch.select(partCols.map(col(_).cast("string")): _*).distinct().collect()
-        .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq
-      val merged = CandleStore.readPartitions(spark, path, keys)
-        .join(broadcast(batch.select(keyCols.map(col): _*)), keyCols, "left_anti")
-        .unionByName(batch)
-        // one task writes each partition, so it is one file
-        .repartition(partCols.map(col): _*)
-        .persist()
-      try {
-        // materialize before writing: the write target is also the read
-        // source, which Spark (rightly) refuses without a barrier
-        merged.count()
-        // a writer option, not the session conf: the session is shared
-        merged.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy(partCols: _*)
-          .parquet(path)
-        andThen(merged, keys)
-      } finally merged.unpersist()
-    } finally batch.unpersist()
-  }
+    CandleMerge(rawBatch, path)((rows, r) =>
+      (r.getUTF8String(CandleRows.Timeframe).toString, r.getUTF8String(CandleRows.Symbol).toString, rows.date(r))) {
+      case (stored, (tf, symbol, day), batch) => CandleMerge.replace(stored.read(tf, symbol, day), batch)
+    }
 
   /** The reference's full cascade as an incremental streaming
     * materialization (reference: CandlestickAggregator.kt:119-186 —
     * the minute candle stream is re-windowed into HOUR/DAY/MONTH):
-    * each micro-batch runs [[cascadeMerge]], which rewrites only the
-    * (timeframe, symbol, window_date) partitions the batch touches.
-    * The store always holds a consistent view of all four timeframes,
-    * and the work per batch follows the days it touches, not the
-    * history stored.
+    * each micro-batch runs [[cascadeMerge]], one Spark job that
+    * rewrites only the (timeframe, symbol, window_date) partitions the
+    * batch touches, swapping DAY in last. The work per batch follows
+    * the days it touches, not the history stored. `minuteCandles` must
+    * meet [[cascadeMerge]]'s preconditions in every batch, as
+    * [[candles]] at MINUTE in update mode does.
     */
   def cascadeToStore(minuteCandles: DataFrame, path: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
@@ -253,44 +225,50 @@ object CandleStream {
       .start()
 
   /** One cascade step, shared by the streaming sink and the batch
-    * backfill, as two merges ([[mergeBatchIntoStore]]):
-    *  1. the minute batch is merged; the merged minute partitions are
-    *     kept (persisted) — each is one (symbol, date), whole;
-    *  1. one aggregate ([[Candles.rollupEach]]) rolls the HOUR and DAY
-    *     candles of those dates up from them, and the MONTH candle of
-    *     each touched (symbol, month) from the month's stored DAY
-    *     candles, with each touched day's minutes in place of its
-    *     stale DAY candle; the three timeframes are merged in one
-    *     write.
+    * backfill, as one Spark job ([[graft.operators.CandleMerge]]): the
+    * minute batch is grouped by (symbol, month), and each group's task
+    *  1. merges the batch's minutes into the stored MINUTE partition of
+    *     each day they touch (same window_start replaced), so it holds
+    *     each of those days whole;
+    *  1. rolls the HOUR and DAY candles of those days up from them;
+    *  1. rolls the MONTH candle up from those DAY candles and the
+    *     month's other stored DAY partitions.
+    * The HOUR, DAY and MONTH partitions it writes are recomputed
+    * whole, never read back. Every rewritten partition is swapped in
+    * by timeframe: MINUTE, HOUR, MONTH, and DAY last, which
+    * `CandleBackfill` relies on. The roll-up ([[graft.operators.CandleRows]]) equals
+    * [[Candles.rollupEach]] bit for bit, so the store equals
+    * [[Candles.multiTimeframe]] over the same trades.
     *
-    * DAY is thus written after MINUTE, which `CandleBackfill` relies
-    * on. The month roll-up is exact: the OHLCV aggregate is min/max,
-    * min_by/max_by on window_start and long sums over children with
-    * disjoint time spans, so it equals the minute→month rollup bit for
-    * bit.
-    *
-    * Preconditions: a stored MINUTE partition holds every minute
-    * candle of its (symbol, date) — true of any store written only by
-    * these merges, which carry a partition's unchanged rows — and the
-    * stored DAY candles of every other day of a touched month are
-    * current, since MONTH is rolled from them. A cascade interrupted
-    * between its two merges leaves its days without a current DAY
-    * candle; re-running it (a streaming retry of the batch, or
-    * `CandleBackfill`, which re-processes days that lack one) restores
-    * both.
+    * Preconditions: the batch rows are MINUTE candles with the candle
+    * columns of [[Candles.candleColumns]], no null OHLCV column and one
+    * candle per (symbol, window_start) (all checked); a stored MINUTE
+    * partition holds every minute candle of its (symbol, date), true of
+    * any store written only by these merges; the stored DAY candles of
+    * every other day of a touched month are current, since MONTH is
+    * rolled from them; and no other merge writes the store meanwhile.
+    * A cascade interrupted during its swaps leaves some of its days
+    * without a current DAY partition; re-running it (a streaming retry
+    * of the batch, or `CandleBackfill`, which re-processes such days)
+    * restores them.
     */
   def cascadeMerge(minuteBatch: DataFrame, path: String): Unit =
-    mergePartitions(minuteBatch, path) { (minutes, keys) =>
-      val touched = keys.map { case (_, symbol, date) => (symbol, LocalDate.parse(date)) }.toSet
-      val otherDays = touched.flatMap { case (symbol, date) =>
-        val first = date.withDayOfMonth(1)
-        (0 until date.lengthOfMonth).map(i => (symbol, first.plusDays(i)))
-      } -- touched
-      val storedDays = CandleStore.readDates(minuteBatch.sparkSession, path,
-        CandleTimeFrame.Day, otherDays.groupMap(_._1)(_._2))
-      mergeBatchIntoStore(Candles.rollupEach(Seq(
-        minutes -> Seq(CandleTimeFrame.Hour, CandleTimeFrame.Day, CandleTimeFrame.Month),
-        storedDays -> Seq(CandleTimeFrame.Month))), path)
+    CandleMerge(minuteBatch, path)((rows, r) =>
+      (r.getUTF8String(CandleRows.Symbol).toString, rows.month(rows.date(r)))) {
+      case (stored, (symbol, month), minutes) =>
+        val rows = stored.rows
+        require(minutes.forall(_.getUTF8String(CandleRows.Timeframe).toString == CandleTimeFrame.Minute),
+          "cascadeMerge takes MINUTE candles")
+        val days = minutes.groupBy(rows.date).toSeq.sortBy(_._1).map { case (day, batch) =>
+          day -> CandleMerge.replace(stored.read(CandleTimeFrame.Minute, symbol, day), batch)
+        }
+        val merged = days.flatMap(_._2)
+        val dayCandles = rows.rollup(merged, CandleTimeFrame.Day)
+        val storedDays = stored.days(CandleTimeFrame.Day, symbol)
+          .filter(d => rows.month(d) == month && !days.exists(_._1 == d))
+          .flatMap(stored.read(CandleTimeFrame.Day, symbol, _))
+        merged ++ rows.rollup(merged, CandleTimeFrame.Hour) ++ dayCandles ++
+          rows.rollup(dayCandles ++ storedDays, CandleTimeFrame.Month)
     }
 
   /** Run a streaming candle pipeline over a bounded source to

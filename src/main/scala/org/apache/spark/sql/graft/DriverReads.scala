@@ -5,7 +5,8 @@ import java.time.ZoneId
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.paths.SparkPath
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
 import org.apache.spark.sql.catalyst.json.{JacksonGenerator, JSONOptions}
@@ -18,12 +19,14 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.util.HadoopFSUtils
+import org.apache.spark.util.{HadoopFSUtils, SerializableConfiguration}
 
 /** Spark's own row decoding and rendering, run on the driver without a
   * Spark job: what a Parquet scan task and `Dataset.toJSON` do, for
-  * rows that fit on the driver. Lives under org.apache.spark.sql
-  * because the reader, the JSON generator and the datetime helpers are
+  * rows that fit on the driver. Also the two conversions between a
+  * DataFrame and the RDD of its internal rows that a merge job runs
+  * its tasks on. Lives under org.apache.spark.sql because the reader,
+  * the JSON generator, the datetime helpers and those conversions are
   * `private[sql]` / `private[spark]`.
   */
 object DriverReads {
@@ -69,34 +72,56 @@ object DriverReads {
   def localFrame(spark: SparkSession, schema: StructType, rows: Seq[InternalRow]): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
       LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+
+  /** The RDD Spark runs for `df`'s plan. Its rows may be reused between
+    * calls to `next`: copy what is kept. An adaptive plan runs its
+    * shuffle stages here; any other plan runs nothing until the RDD
+    * does.
+    */
+  def rows(df: DataFrame): RDD[InternalRow] =
+    df.asInstanceOf[classic.Dataset[Row]].queryExecution.toRdd
+
+  /** `rows` (in `schema`'s order) as a DataFrame, computed as part of
+    * the job that runs the frame.
+    */
+  def frame(spark: SparkSession, schema: StructType, rows: RDD[InternalRow]): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
 }
 
 /** Spark's Parquet reader for the partition directories of a table
   * whose rows have `schema`, with `partitionColumns` (string-typed
   * columns of `schema`) taken from the directory names instead of the
-  * files. Built once: building broadcasts the Hadoop configuration.
-  * [[foreach]] may run on many threads at once.
+  * files. Built once on the driver: building broadcasts the Hadoop
+  * configuration. [[foreach]] may run on many threads at once, and in
+  * tasks: the reader is serializable.
   */
-final class PartitionReader(spark: SparkSession, schema: StructType, partitionColumns: Seq[String]) {
+final class PartitionReader(spark: SparkSession, schema: StructType, partitionColumns: Seq[String])
+    extends Serializable {
   require(partitionColumns.forall(c => schema(c).dataType == StringType),
     s"partition columns must be strings: ${partitionColumns.mkString(",")}")
 
   private val partitionSchema = StructType(partitionColumns.map(schema(_)))
   private val dataSchema = StructType(schema.filterNot(f => partitionColumns.contains(f.name)))
-  private val hadoopConf = spark.sessionState.newHadoopConf()
+  /** Shipped inside the tasks that use the reader, not broadcast, so a
+    * reader used only on the driver costs no second broadcast.
+    */
+  private val hadoopConf = new SerializableConfiguration(spark.sessionState.newHadoopConf())
   private val read = new ParquetFileFormat().buildReaderWithPartitionValues(
     spark, dataSchema, partitionSchema, dataSchema, Nil,
-    Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), hadoopConf)
+    Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), hadoopConf.value)
 
   /** The reader emits data columns then partition columns; this puts
     * each row in `schema`'s order. One per thread: a projection reuses
     * its output row.
     */
-  private val toSchemaOrder = {
+  @transient private lazy val toSchemaOrder = {
     val readOrder = (dataSchema ++ partitionSchema).map(_.name)
     ThreadLocal.withInitial(() => UnsafeProjection.create(schema.map(f =>
       BoundReference(readOrder.indexOf(f.name), f.dataType, f.nullable))))
   }
+
+  /** The file system of `path`, under the reader's Hadoop configuration. */
+  def fileSystem(path: Path): FileSystem = path.getFileSystem(hadoopConf.value)
 
   /** Calls `f` on every row of the data files under `dir` (see
     * [[DriverReads.dataFiles]]), whose partition columns hold
@@ -107,7 +132,7 @@ final class PartitionReader(spark: SparkSession, schema: StructType, partitionCo
   def foreach(dir: Path, partitionValues: Seq[String])(f: InternalRow => Unit): Unit = {
     val values = InternalRow.fromSeq(partitionValues.map(UTF8String.fromString))
     val project = toSchemaOrder.get
-    DriverReads.dataFiles(dir.getFileSystem(hadoopConf), dir).foreach { file =>
+    DriverReads.dataFiles(fileSystem(dir), dir).foreach { file =>
       val rows = read(PartitionedFile(values, SparkPath.fromPath(file.getPath), 0, file.getLen,
         modificationTime = file.getModificationTime, fileSize = file.getLen))
       try rows.foreach(r => f(project(r)))

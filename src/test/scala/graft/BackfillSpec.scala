@@ -70,6 +70,27 @@ class BackfillSpec extends SparkSpec {
     assert(got.collect().toSet === want.collect().toSet)
   }
 
+  test("a day whose DAY partition is missing for one of its symbols is re-processed") {
+    // a cascade interrupted among its DAY swaps: one symbol's DAY
+    // candle of a two-symbol day landed, the other's did not
+    val events = Files.createTempDirectory("partial-events").toString
+    val store = Files.createTempDirectory("partial-candles").toString
+    val day = Seq(
+      StockTransaction("AAPL", 10.0, 5, ts("2024-03-01 09:30:05")),
+      StockTransaction("MSFT", 99.0, 2, ts("2024-03-01 10:10:00")))
+    EventStore.write(day.toDF(), events)
+    assert(CandleBackfill.run(spark, events, store) === Seq("2024-03-01"))
+    val dayDir = java.nio.file.Paths.get(store, "timeframe=DAY", "symbol=MSFT", "window_date=2024-03-01")
+    Files.walk(dayDir).sorted(java.util.Comparator.reverseOrder()).forEach(Files.delete(_))
+    assert(!Files.exists(dayDir))
+
+    assert(CandleBackfill.run(spark, events, store) === Seq("2024-03-01"))
+    val want = Candles.multiTimeframe(day.toDF()).select(Candles.candleColumns: _*)
+    val got = spark.read.parquet(store).select(Candles.candleColumns: _*)
+    assert(got.collect().toSet === want.collect().toSet)
+    assert(CandleBackfill.run(spark, events, store) === Nil)
+  }
+
   test("force re-merges an already-processed day (late-event restatement)") {
     val events = Files.createTempDirectory("restate-events").toString
     val store = Files.createTempDirectory("restate-candles").toString

@@ -2,9 +2,11 @@ package graft
 
 import java.nio.file.Files
 import java.sql.Timestamp
+import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -205,5 +207,92 @@ class CascadeStoreSpec extends SparkSpec {
       assert(readStore(dir).filter(col("timeframe") === CandleTimeFrame.Minute).count() === 2,
         s"preset $preset")
     } finally original.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** Number of Spark jobs that start while `body` runs. A sentinel job,
+    * started after `body` from this thread, is awaited so that every
+    * earlier job start has reached the listener.
+    */
+  private def jobsDuring(body: => Unit): Int = {
+    val groups = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    val sentinel = "job-count-sentinel"
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      spark.sparkContext.setJobGroup(sentinel, sentinel)
+      try spark.range(1).count() finally spark.sparkContext.clearJobGroup()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!groups.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(groups.contains(sentinel), "the sentinel job never reached the listener")
+      groups.asScala.count(_ != sentinel)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** The names directly under the store root that Spark's readers hide. */
+  private def hiddenEntries(dir: String): Seq[String] = {
+    val list = Files.list(java.nio.file.Paths.get(dir))
+    try list.iterator().asScala.map(_.getFileName.toString).filter(_.startsWith("_")).toSeq
+    finally list.close()
+  }
+
+  test("a streaming-sized cascadeMerge or mergeBatchIntoStore is at most two Spark jobs and leaves no staging") {
+    val dir = Files.createTempDirectory("jobs-cascade").toString
+    val symbols = Seq("AAPL", "MSFT", "A:B", "0700", "NVDA")
+    // a store holding a day of history, one trade a minute per symbol
+    CandleStream.cascadeMerge(Candles.minuteCandles(symbols.zipWithIndex.flatMap { case (s, i) =>
+      (0 until 1440).map(m => StockTransaction(s, 10.0 + i + m % 7, 1 + m % 5,
+        new Timestamp(ts("2024-03-01 00:00:30").getTime + m * 60000L)))
+    }.toDF()), dir)
+    // a micro-batch: the next minute of every symbol, already computed,
+    // as the sink receives it
+    val minute = Candles.minuteCandles(symbols.map(s => StockTransaction(s, 20.0, 3, ts("2024-03-02 00:00:10"))).toDF())
+    val batch = spark.createDataFrame(minute.collect().toSeq.asJava, minute.schema)
+
+    assert(jobsDuring(CandleStream.cascadeMerge(batch, dir)) <= 2, "cascadeMerge")
+    assert(hiddenEntries(dir) === Nil, "after cascadeMerge")
+    assert(jobsDuring(CandleStream.mergeBatchIntoStore(batch, dir)) <= 2, "mergeBatchIntoStore")
+    assert(hiddenEntries(dir) === Nil, "after mergeBatchIntoStore")
+  }
+
+  /** Every stored row with its partition directory, in file order, its
+    * doubles as raw bits: two stores are equal bit for bit when these are.
+    */
+  private def storeBits(dir: String): Map[String, Seq[Seq[Any]]] =
+    readStore(dir).withColumn("file", input_file_name()).collect().toSeq
+      .groupMap { r =>
+        val f = r.getAs[String]("file")
+        f.substring(f.indexOf("timeframe="), f.lastIndexOf('/'))
+      } { r =>
+        r.toSeq.dropRight(1).map {
+          case d: Double => java.lang.Double.doubleToRawLongBits(d)
+          case v => v
+        }
+      }
+
+  test("a fetch failure inside the cascade's merge job resubmits the stage and writes the same store") {
+    // as in RetrySpec: a FetchFailed resubmits the map stage rather than
+    // counting against the shared local session's single task attempt
+    val txns = Seq("AAPL", "A:B").flatMap { s =>
+      Seq(StockTransaction(s, 10.0, 5, ts("2024-01-31 23:59:05")),
+        StockTransaction(s, 12.0, 3, ts("2024-02-01 00:00:40")),
+        StockTransaction(s, 9.5, 2, ts("2024-02-01 10:10:00")))
+    }.toDF()
+    val clean = Files.createTempDirectory("retry-clean").toString
+    val injected = Files.createTempDirectory("retry-injected").toString
+    CandleStream.cascadeMerge(Candles.minuteCandles(txns), clean)
+    Chaos.resetFetchState()
+    try {
+      CandleStream.cascadeMerge(Chaos.fetchFailOnce(Candles.minuteCandles(txns)), injected)
+      assert(Chaos.fetchFailuresThrown.get() >= 1L, "the injected FetchFailedException never fired")
+    } finally Chaos.resetFetchState()
+    val want = storeBits(clean)
+    assert(want.keySet.count(_.startsWith("timeframe=MONTH/")) === 4)
+    assert(storeBits(injected) === want)
+    assert(hiddenEntries(injected) === Nil)
   }
 }
